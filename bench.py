@@ -130,45 +130,16 @@ def main() -> None:
           f"({'tmpfs' if ckpt_root == '/dev/shm' else 'disk-backed'})",
           file=sys.stderr)
 
-    from pyspark.sql import SparkSession
+    from framequery_spark.plans.tuning import local_session
 
-    spark = (
-        SparkSession.builder
-        .master(f"local[{cpus}]")
-        .appName("framequery_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "64g"))
-        # A 150+-entry bench x (warmup + reps) generates thousands of
-        # Janino classes; when the code cache fills, the JIT disables or
-        # thrashes and entries intermittently read 5-10x their steady
-        # state (measured r09 with the JDK default 240 MB:
-        # op_dsir_select [6.0, 4.6, 4.0, 3.7, 11.1, 23.1] idle-host vs
-        # [.., 2.3, 2.6, 2.4, 2.0, 2.0] cache-sized — the BENCH_r08
-        # 12.6 s anomaly). 1 GiB stopped sufficing when the inventory
-        # crossed ~150 entries: op_semdedup read [1.3, 2.7, 6.4, 6.3]
-        # in-suite vs 0.8 s solo with 1g, and [1.7, (10.1 stall), 3.9,
-        # 1.2, 1.1] with 2g — the flushing-evicts-hot-GEMM-methods
-        # signature. Reservation is virtual; flushing evicts cold
-        # methods instead of stopping C2.
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from framequery_spark.plans.tuning import configure_session
-
-    configure_session(spark, cpus)
+    spark = local_session(cpus, "framequery_spark_bench")
 
     import __spark_entry__ as entry
 
     qs = entry.queries()
     # SPARK_GRAFT_ONLY=name1,name2 — solo / isolation runs (r12: used to
-    # re-measure regression suspects outside suite-order effects). The
+    # re-measure regression suspects outside suite-order effects) and
+    # per-entry build/exec profiles (bench_entries.json "build_exec"). The
     # driver never sets it, so the recorded BENCH_r*.json is always full.
     only = os.environ.get("SPARK_GRAFT_ONLY", "")
     if only.strip():
@@ -230,44 +201,59 @@ def main() -> None:
     timings: dict[str, float] = {}
     all_runs: dict[str, list] = {}
     rep_diag: dict[str, list] = {}  # per-rep [released, persistent-after]
+    rep_phase: dict[str, list] = {}  # per-rep [build_s, exec_s]
     total = 0.0
+    from framequery_spark.operators.cache import release_cached
+
+    def _rep(name, fn, runs: list) -> int:
+        """One timed rep: build the frame (Python/py4j plus any driver-side
+        materialization the operator does), collect it, then release.
+        Appends the total to `runs` and records the build/exec split and
+        the cache diagnostic. Raises whatever the entry raises; returns
+        the row count."""
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        n = len(df.collect())
+        t2 = time.perf_counter()
+        runs.append(t2 - t0)
+        rep_phase.setdefault(name, []).append(
+            [round(t1 - t0, 3), round(t2 - t1, 3)])
+        # reps stay independent: drop persisted intermediates the
+        # operators leave behind. BLOCKING release — the r09 full
+        # bench showed op_jaccard_pairs reps rising monotonically
+        # [3.65, 5.62, 8.05]; with fire-and-forget unpersist the async
+        # block removal can lag back-to-back reps, so each rep runs
+        # against the previous rep's still-resident gram cache.
+        # Blocking removal keeps reps independent, and the per-rep
+        # diagnostic records (released handles, persistent RDDs still
+        # registered after release) as the attribution evidence.
+        n_released = release_cached(blocking=True)
+        spark.catalog.clearCache()
+        try:
+            n_left = spark.sparkContext._jsc.getPersistentRDDs().size()
+        except Exception:
+            n_left = -1
+        rep_diag.setdefault(name, []).append([n_released, n_left])
+        return n
+
     for name, fn in qs.items():
         # NO per-entry System.gc(): with the code cache sized correctly
-        # (above) the forced gc is purely harmful — its deopt/re-profile
-        # storm inflates the following entry's reps 3-4x (measured r09:
-        # op_lr_quality [5.3, 16.1, 19.6] with a gc before each entry vs
-        # [4.8, 4.2, 4.5] without, idle host, same code). The r08-era gc
-        # was treating a symptom of the code-cache thrash.
+        # (plans/tuning.py:local_session) the forced gc is purely harmful
+        # — its deopt/re-profile storm inflates the following entry's
+        # reps 3-4x (measured r09: op_lr_quality [5.3, 16.1, 19.6] with a
+        # gc before each entry vs [4.8, 4.2, 4.5] without, idle host,
+        # same code). The r08-era gc was treating a symptom of the
+        # code-cache thrash.
         runs: list[float] = []
         failed = False
         for r in range(reps):
-            t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                n = len(df.collect())
+                n = _rep(name, fn, runs)
             except Exception as exc:  # a failing query must not zero the bench
                 print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
                 failed = True
                 break
-            runs.append(time.perf_counter() - t0)
-            # reps stay independent: drop persisted intermediates the
-            # operators leave behind. BLOCKING release — the r09 driver
-            # bench showed op_jaccard_pairs reps rising monotonically
-            # [3.65, 5.62, 8.05]; with fire-and-forget unpersist the async
-            # block removal can lag back-to-back reps, so each rep runs
-            # against the previous rep's still-resident gram cache.
-            # Blocking removal keeps reps independent, and the per-rep
-            # diagnostic below records (released handles, persistent RDDs
-            # still registered after release) as the attribution evidence.
-            from framequery_spark.operators.cache import release_cached
-
-            n_released = release_cached(blocking=True)
-            spark.catalog.clearCache()
-            try:
-                n_left = spark.sparkContext._jsc.getPersistentRDDs().size()
-            except Exception:
-                n_left = -1
-            rep_diag.setdefault(name, []).append([n_released, n_left])
         if failed or not runs:
             timings[name] = -1.0
             continue
@@ -294,22 +280,10 @@ def main() -> None:
         if (len(runs) >= 2 and min(runs) > 0
                 and max(runs) / min(runs) > 2.5) or still_warming:
             for _ in range(3 if still_warming else 2):
-                t0 = time.perf_counter()
                 try:
-                    fn(spark, sf_dir).collect()
+                    _rep(name, fn, runs)
                 except Exception:
                     break
-                runs.append(time.perf_counter() - t0)
-                from framequery_spark.operators.cache import release_cached
-
-                n_released = release_cached(blocking=True)
-                spark.catalog.clearCache()
-                try:
-                    n_left = \
-                        spark.sparkContext._jsc.getPersistentRDDs().size()
-                except Exception:
-                    n_left = -1
-                rep_diag.setdefault(name, []).append([n_released, n_left])
                 if len(runs) >= 2 and runs[-1] >= runs[-2] * 0.9:
                     break  # flattened
         # LOWER median: rep noise is strictly one-sided (GC/JIT stalls
@@ -383,6 +357,7 @@ def main() -> None:
                 "load1_end": round(load1_end, 1),
                 "entries": {k: {"median": v,
                                 "reps": all_runs.get(k, []),
+                                "build_exec": rep_phase.get(k, []),
                                 "cache_diag": rep_diag.get(k, [])}
                             for k, v in timings.items()},
             }, fh, indent=1, sort_keys=True)

@@ -20,6 +20,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions import _let
 from ..functions.registry import REGISTRY
 from ..parser import ast
 
@@ -223,17 +224,6 @@ _RANGE_ACCESSORS = {
     "lower_inc": "range_lower_inc", "upper_inc": "range_upper_inc",
     "lower_inf": "range_lower_inf", "upper_inf": "range_upper_inf",
 }
-
-
-def _let(value: Column, body) -> Column:
-    """Single-evaluation let-binding: evaluate ``value`` once per row and
-    feed it to ``body`` as a HOF lambda variable (``transform`` over a
-    one-element array).  Catalyst performs no common-subexpression
-    elimination on duplicated variant/JSON subtrees — referencing an
-    expensive Column twice re-executes the whole tree (q67's json_value
-    inlined parse_json(props) seven times) — so multi-reference bodies
-    bind their inputs here instead."""
-    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def _json_path_for_key(k: str) -> str:

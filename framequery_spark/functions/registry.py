@@ -592,8 +592,11 @@ _fixed("regexp_split_to_array", _regexp_split_to_array)
 
 
 # ------------------------------------------------- vector math (embeddings)
-# JVM-side higher-order functions; no Python UDF. Used by the similarity /
-# dedup operators and exposed in SQL for ad-hoc queries.
+# JVM-side higher-order functions; no Python UDF. The one dot / norm /
+# cosine implementation: the similarity, dedup, pq and contamination
+# operators call these too, and SQL exposes them for ad-hoc queries. Each
+# is a sequential left fold from 0.0 over double casts, bit-compatible
+# with a plain loop (what the DuckDB oracle computes).
 @register("dot_product", "list_dot_product", "list_inner_product")
 def _dot(a):
     return F.aggregate(

@@ -264,15 +264,11 @@ def stem_words(words: List[str]) -> List[str]:
 # Python implementation above over the published vectors AND the real
 # documents-corpus vocabulary.
 
-def _expr_let(value, body):
-    from pyspark.sql import functions as F
-
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
 def stem_expr(word):
     """Porter2 stem of a lowercase-word Column — pure JVM expressions."""
     from pyspark.sql import functions as F
+
+    from . import _let
 
     VOW = "aeiouy"
 
@@ -334,11 +330,11 @@ def stem_expr(word):
                 def with_r2(r2):
                     return _steps(m, r1, r2)
 
-                return _expr_let(region_from(m, r1), with_r2)
+                return _let(region_from(m, r1), with_r2)
 
-            return _expr_let(r1_expr, with_r1)
+            return _let(r1_expr, with_r1)
 
-        return _expr_let(marked, with_marked)
+        return _let(marked, with_marked)
 
     def _steps(m, r1, r2):
         # ---- step 1a
@@ -352,16 +348,16 @@ def stem_expr(word):
              .otherwise(m))
 
         def after_1a(w1):
-            rest = _expr_let(_step_1b(w1, r1), lambda w2:
-                             _expr_let(_step_1c(w2), lambda w3:
-                             _expr_let(_step_2(w3, r1), lambda w4:
-                             _expr_let(_step_3(w4, r1, r2), lambda w5:
-                             _expr_let(_step_4(w5, r2), lambda w6:
-                                       _step_5(w6, r1, r2))))))
+            rest = _let(_step_1b(w1, r1), lambda w2:
+                        _let(_step_1c(w2), lambda w3:
+                        _let(_step_2(w3, r1), lambda w4:
+                        _let(_step_3(w4, r1, r2), lambda w5:
+                        _let(_step_4(w5, r2), lambda w6:
+                                  _step_5(w6, r1, r2))))))
             return F.when(w1.isin(*sorted(_EXCEPTIONS2)), w1) \
                     .otherwise(rest)
 
-        return _expr_let(s1a, after_1a)
+        return _let(s1a, after_1a)
 
     def _step_1b(w, r1):
         def post(t):
@@ -378,7 +374,7 @@ def stem_expr(word):
 
         def del_branch(suf):
             trunc = chop(w, len(suf))
-            return F.when(has_vowel(trunc), _expr_let(trunc, post)) \
+            return F.when(has_vowel(trunc), _let(trunc, post)) \
                     .otherwise(w)
 
         return (
@@ -462,7 +458,7 @@ def stem_expr(word):
     def _step_5(w, r1, r2):
         e_del = (in_region(w, 1, r2)
                  | (in_region(w, 1, r1)
-                    & ~_expr_let(chop(w, 1), ends_short_syllable)))
+                    & ~_let(chop(w, 1), ends_short_syllable)))
         return (
             F.when(ends(w, "e"),
                    F.when(e_del, chop(w, 1)).otherwise(w))
@@ -476,4 +472,4 @@ def stem_expr(word):
                    F.element_at(exc1, w0))
              .otherwise(F.regexp_replace(pipeline(w0), "Y", "y")))
 
-    return _expr_let(word, root)
+    return _let(word, root)

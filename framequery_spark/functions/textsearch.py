@@ -63,6 +63,8 @@ from typing import Callable, List, Optional, Tuple
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import _let
+
 TSVECTOR_DDL = ("array<struct<lexeme:string,positions:array<int>,"
                 "weight:string>>")
 
@@ -115,7 +117,6 @@ def prepared_tokens(text: Column, config: str) -> Column:
         raise TsQueryError(
             f"text search configuration {config!r} is not supported "
             "(simple / english)")
-    from ..operators.dedup import _let
     from .snowball import stem_expr
 
     toks = _tokens_with_pos(text)
@@ -148,7 +149,6 @@ def vector_from_tokens(toks: Column) -> Column:
     is field-ordered — find the index where each lexeme's run starts,
     and slice each run's positions out once: one O(n log n) sort plus
     O(n) slicing per row."""
-    from ..operators.dedup import _let
 
     def build(srt: Column) -> Column:
         n = F.size(srt)
@@ -444,7 +444,6 @@ def ts_headline(text: Column, node, config: str = "simple",
       parse_headline_options).
     Matching uses the config's normalization (english: Snowball stem),
     so 'rats' highlights for query 'rat' like pg. Pure JVM HOFs."""
-    from ..operators.dedup import _let
     from .snowball import stem_expr
 
     opts = parse_headline_options(options)
@@ -1014,7 +1013,6 @@ def _rank_and(tsv: Column, terms, wmap: Column) -> Column:
     Resolution max-iteration limit from 3 query terms up (measured).
     No contributing pair (fewer than two found terms) -> pg's res<0
     clamp, 1e-20."""
-    from ..operators.dedup import _let
 
     q = F.lit(1.0)       # product of (1 - curw) over all position pairs
     had = F.lit(False)   # any pair of found terms contributed
@@ -1200,7 +1198,6 @@ def ts_rank_cd(tsv: Column, node, weights=None,
     extent distance, cd-only in pg too) rides the same fold as three
     extra state fields (extent count, 1/distance sum, previous extent
     midpoint), materialized only when the bit is requested."""
-    from ..operators.dedup import _let
 
     # validate the mask up front so a bad literal fails at compile time,
     # before the cover fold is built
@@ -1327,13 +1324,11 @@ def ts_rank_cd(tsv: Column, node, weights=None,
         return F.aggregate(idx, init, step, lambda st: st["wdoc"])
 
     if track_ext:
-        from ..operators.dedup import _let as _let2
-
         def with_state(st: Column) -> Column:
             return _apply_rank_normalization(
                 st["wdoc"], tsv, normalization, "ts_rank_cd()", ext=st)
 
-        return _let2(_let(doc_expr, run), with_state).cast("float")
+        return _let(_let(doc_expr, run), with_state).cast("float")
     rank = _let(doc_expr, run)
     return _apply_rank_normalization(rank, tsv, normalization,
                                      "ts_rank_cd()").cast("float")

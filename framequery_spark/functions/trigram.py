@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _let
+from . import _let
 
 SIMILARITY_THRESHOLD = 0.3
 WORD_SIMILARITY_THRESHOLD = 0.6

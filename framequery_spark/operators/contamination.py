@@ -235,9 +235,9 @@ def semantic_decontaminate(train: DataFrame, benchmark: DataFrame,
     block both sides with the IVF/LSH generators first (the
     similarity-module path) — at that size the problem IS ANN search.
     """
-    from .dedup import cosine
+    from ..functions.registry import _cosine
 
     bcol = bench_vec_col or vec_col
     bench = benchmark.select(F.col(bcol).alias("__bvec"))
-    cond = cosine(F.col(vec_col), F.col("__bvec")) >= F.lit(threshold)
+    cond = _cosine([F.col(vec_col), F.col("__bvec")]) >= F.lit(threshold)
     return train.join(F.broadcast(bench), cond, "left_anti")

@@ -22,6 +22,10 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import _let
+from ..functions.registry import _dot, _l2norm
+
+
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition an under-partitioned input up to the session default
     parallelism before expression-heavy stages. Small few-file sources
@@ -67,15 +71,6 @@ def exact_dedup(df: DataFrame, keys: List[str],
 
 
 # --------------------------------------------------------------- shingles
-
-
-def _let(value: Column, body) -> Column:
-    """Let-bind an expression as a higher-order-function lambda variable so
-    `body` sees it evaluated exactly once per row. Interpreted HOFs
-    (CodegenFallback) re-evaluate every non-variable subtree once per array
-    element — inlining e.g. a regexp split() into a transform() lambda turns
-    O(words) shingling into O(words^2) regex work."""
-    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def gram_extract(text: Column, k: int) -> Column:
@@ -337,8 +332,7 @@ def trgm_pairs(df: DataFrame, id_col: str = "doc_id",
     minhash_lsh_pairs — this exists for the fuzzy-string-match shape
     pg_trgm serves.
     """
-    from ..functions.trigram import trigram_array  # deferred: trigram
-    # imports _let from this module, so a top-level import would cycle
+    from ..functions.trigram import trigram_array
 
     sh = (_spread(df)
           .select(F.col(id_col).alias("__id"),
@@ -715,18 +709,6 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
 # ------------------------------------------------- embedding cosine near-dup
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<numeric> columns in double precision,
-    sequential fold (bit-compatible with a plain loop)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0),
-                            lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0),
-                            lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    return dot / (na * nb)
-
-
 def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              threshold: float = 0.9,
@@ -749,9 +731,7 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
     expression eval on dense float math regardless.
     """
     if block_col is not None:
-        norm = F.sqrt(F.aggregate(
-            F.col(vec_col), F.lit(0.0),
-            lambda acc, v: acc + v.cast("double") * v.cast("double")))
+        norm = _l2norm([F.col(vec_col)])
         staged = _spread(df).select(F.col(id_col).alias("__id"),
                                     F.col(vec_col).alias("__v"),
                                     norm.alias("__norm"),
@@ -759,11 +739,8 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
         a = staged.toDF("id1", "__v1", "__n1", "__blk")
         b = staged.toDF("id2", "__v2", "__n2", "__blk")
         joined = a.join(b, on="__blk").filter(F.col("id1") < F.col("id2"))
-        dot = F.aggregate(
-            F.zip_with("__v1", "__v2",
-                       lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0), lambda acc, v: acc + v)
-        sim = dot / (F.col("__n1") * F.col("__n2"))
+        sim = _dot([F.col("__v1"), F.col("__v2")]) \
+            / (F.col("__n1") * F.col("__n2"))
         return (joined.withColumn("cosine", sim)
                 .filter(F.col("cosine") >= threshold)
                 .select("id1", "id2", F.round("cosine", 4).alias("cosine")))

@@ -111,18 +111,6 @@ def _log_ratio_from(t: DataFrame, r: DataFrame, n_buckets: int,
     return joined.select("bucket", lr.alias("lr"))
 
 
-def dsir_log_ratio(target: DataFrame, raw: DataFrame,
-                   text_col: str = "text", n_buckets: int = 10000,
-                   ngram_sizes: Sequence[int] = (1, 2),
-                   alpha: float = 0.5) -> DataFrame:
-    """(bucket, lr): per-bucket log p_target(b) - log p_raw(b) with
-    add-alpha smoothing.  Both sides are bounded (<= n_buckets rows)."""
-    return _log_ratio_from(
-        bucket_distribution(target, text_col, n_buckets, ngram_sizes),
-        bucket_distribution(raw, text_col, n_buckets, ngram_sizes),
-        n_buckets, alpha)
-
-
 def _weights_with_feats(raw: DataFrame, target: DataFrame, text_col: str,
                         id_col: str, n_buckets: int,
                         ngram_sizes: Sequence[int], alpha: float):

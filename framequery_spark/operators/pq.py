@@ -43,7 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import MAX_IVF_TRAIN_SAMPLE, _vec_dot, _vec_norm
+from ..functions.registry import _dot, _l2norm
+from .similarity import MAX_IVF_TRAIN_SAMPLE
 
 
 def train_pq_codebooks(corpus: DataFrame, n_subvectors: int = 8,
@@ -145,7 +146,7 @@ def _query_luts(queries: DataFrame, codebooks: List[List[List[float]]],
 
     return queries.select(F.col(id_col).alias("query_id"),
                           F.col(vec_col).alias("__qv"),
-                          _vec_norm(F.col(vec_col)).alias("__qn"),
+                          _l2norm([F.col(vec_col)]).alias("__qn"),
                           lut(F.col(vec_col)).alias("__lut"))
 
 
@@ -226,8 +227,8 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # exact re-rank of the candidate set only
     cv = corpus.select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).alias("__cv"),
-                       _vec_norm(F.col(vec_col)).alias("__cn"))
-    sim = F.round(_vec_dot(F.col("__qv"), F.col("__cv"))
+                       _l2norm([F.col(vec_col)]).alias("__cn"))
+    sim = F.round(_dot([F.col("__qv"), F.col("__cv")])
                   / (F.col("__qn") * F.col("__cn")), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))

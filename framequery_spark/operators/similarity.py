@@ -20,21 +20,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import _let
+from ..functions.registry import _dot, _l2norm
 from ..sources.local_relation import local_relation
-from .dedup import cosine  # noqa: F401  (re-exported; used by callers)
-
-
-def _vec_norm(col: Column) -> Column:
-    """L2 norm as a sequential double fold (bit-compatible with a plain
-    loop, which is what the DuckDB oracle computes)."""
-    return F.sqrt(F.aggregate(
-        col, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-
-
-def _vec_dot(a: Column, b: Column) -> Column:
-    """Dot product as a sequential double fold (oracle-bit-compatible)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                       F.lit(0.0), lambda acc, v: acc + v)
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -49,19 +37,18 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(vec_col).alias("__qv"),
-                       _vec_norm(F.col(vec_col)).alias("__qn"))
+                       _l2norm([F.col(vec_col)]).alias("__qn"))
     from .dedup import _spread
 
     c = _spread(corpus).select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("__cv"),
-                      _vec_norm(F.col(vec_col)).alias("__cn"))
+                      _l2norm([F.col(vec_col)]).alias("__cn"))
     joined = c.crossJoin(F.broadcast(q)).filter(
         F.col("query_id") != F.col("neighbor_id"))
-    # precomputed norms; same float expression shape as cosine() (dot/(qn*cn))
-    dot = F.aggregate(F.zip_with("__qv", "__cv",
-                                 lambda x, y: x.cast("double") * y.cast("double")),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    sim = F.round(dot / (F.col("__qn") * F.col("__cn")), 6)
+    # precomputed norms; same float expression shape as the registry's
+    # cosine (dot/(qn*cn))
+    sim = F.round(_dot([F.col("__qv"), F.col("__cv")])
+                  / (F.col("__qn") * F.col("__cn")), 6)
     scored = joined.withColumn("cosine", sim)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -141,7 +128,7 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     def bucketize(df: DataFrame, id_alias: str, vec_alias: str,
                   norm_alias: str) -> DataFrame:
         return df.select(F.col(id_alias), F.col(vec_alias),
-                         _vec_norm(F.col(vec_alias)).alias(norm_alias),
+                         _l2norm([F.col(vec_alias)]).alias(norm_alias),
                          F.posexplode(sigs_udf(F.col(vec_alias)))
                          .alias("__table", "__bucket"))
 
@@ -164,7 +151,7 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              .dropDuplicates(["query_id", "neighbor_id"]))
     # norms are computed once per row at bucketize time; the per-candidate
     # re-rank is a single dot fold
-    sim = F.round(_vec_dot(F.col("__qv"), F.col("__cv"))
+    sim = F.round(_dot([F.col("__qv"), F.col("__cv")])
                   / (F.col("__qn") * F.col("__cn")), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -379,17 +366,17 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 5,
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(label_col).alias("__ql"),
                        F.col(vec_col).alias("__qv"),
-                       _vec_norm(F.col(vec_col)).alias("__qn"))
+                       _l2norm([F.col(vec_col)]).alias("__qn"))
     from .dedup import _spread
 
     c = _spread(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(label_col).alias("neighbor_label"),
         F.col(vec_col).alias("__cv"),
-        _vec_norm(F.col(vec_col)).alias("__cn"))
+        _l2norm([F.col(vec_col)]).alias("__cn"))
     joined = c.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_label") != F.col("__ql"))
-    sim = F.round(_vec_dot(F.col("__qv"), F.col("__cv"))
+    sim = F.round(_dot([F.col("__qv"), F.col("__cv")])
                   / (F.col("__qn") * F.col("__cn")), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -441,12 +428,12 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     c = (_spread(corpus)
          .select(F.col(id_col).alias("neighbor_id"),
                  F.col(vec_col).alias("__cv"),
-                 _vec_norm(F.col(vec_col)).alias("__cn"))
+                 _l2norm([F.col(vec_col)]).alias("__cn"))
          .withColumn("__cell", _centroid_udf(centroids)(F.col("__cv"))))
     q = (queries
          .select(F.col(id_col).alias("query_id"),
                  F.col(vec_col).alias("__qv"),
-                 _vec_norm(F.col(vec_col)).alias("__qn"))
+                 _l2norm([F.col(vec_col)]).alias("__qn"))
          .withColumn("__cell", F.explode(
              _centroid_udf(centroids, n_probe)(F.col("__qv")))))
     # small query side broadcast: cell probing is map-side over the corpus
@@ -454,8 +441,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     cands = (c.join(F.broadcast(q), "__cell")
              .filter(F.col("query_id") != F.col("neighbor_id")))
     # norms precomputed per row before the join: the per-candidate work is a
-    # single dot fold instead of the 3 folds of cosine()
-    sim = F.round(_vec_dot(F.col("__qv"), F.col("__cv"))
+    # single dot fold instead of the 3 folds of a full cosine
+    sim = F.round(_dot([F.col("__qv"), F.col("__cv")])
                   / (F.col("__qn") * F.col("__cn")), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -565,7 +552,7 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 3,
                         vec_col=vec_col, query_id_col=query_id_col)
     emb = corpus.select(F.col(id_col).alias("neighbor_id"),
                         F.col(vec_col).alias("__emb"),
-                        _vec_norm(F.col(vec_col)).alias("__n"))
+                        _l2norm([F.col(vec_col)]).alias("__n"))
     pool_df = (cands.join(emb, "neighbor_id")
                .groupBy("query_id")
                .agg(F.collect_list(F.struct(
@@ -582,12 +569,6 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 3,
     # decimal products + decimal round make both engines agree.
     lam_d = F.lit(lam).cast("decimal(7,6)")
     ilam_d = F.lit(round(1.0 - lam, 6)).cast("decimal(7,6)")
-
-    def _let(value, body):
-        # single-evaluation binding (transform over a 1-element array):
-        # each pick is referenced by every later step — without binding
-        # the expression tree re-derives earlier picks exponentially
-        return F.element_at(F.transform(F.array(value), body), 1)
 
     def _desc_id_sort(a, key):
         # row_number ORDER BY key DESC, id ASC restated as a comparator
@@ -608,12 +589,9 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 3,
         rem = F.filter(arr, lambda c: ~F.array_contains(
             picked_ids, c["id"]))
         def scored(c):
-            dot = lambda s: F.aggregate(
-                F.zip_with(c["emb"], s["emb"],
-                           lambda x, y: x.cast("double") * y.cast("double")),
-                F.lit(0.0), lambda acc, v: acc + v)
             maxsim = F.array_max(F.transform(
-                sel, lambda s: F.round(dot(s) / (c["n"] * s["n"]), 6)))
+                sel, lambda s: F.round(_dot([c["emb"], s["emb"]])
+                                       / (c["n"] * s["n"]), 6)))
             score = F.round(
                 lam_d * c["rel"].cast("decimal(18,6)")
                 - ilam_d * maxsim.cast("decimal(18,6)"), 6).cast("double")
@@ -629,8 +607,10 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 3,
                         p["rel"].alias("rel"), p["score"].alias("score"))
 
     def _steps(arr, sel, results, step):
-        # unroll steps 2..k, let-binding each pick; a null pick (pool
-        # exhausted below k) contributes nothing and stays out of sel
+        # unroll steps 2..k, let-binding each pick (every later step
+        # references it; unbound, the tree re-derives earlier picks
+        # exponentially); a null pick (pool exhausted below k)
+        # contributes nothing and stays out of sel
         if step > k:
             return F.filter(F.array(*results),
                             lambda r: r["id"].isNotNull())

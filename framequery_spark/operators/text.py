@@ -121,14 +121,6 @@ def quality_score(text: Column) -> Column:
                          punct_count(text), char_count(text))
 
 
-def lang_scores(text: Column) -> Dict[str, Column]:
-    """Per-language stopword-hit scores (fused one-regex-per-language
-    counts — value-identical to the per-word sums, see
-    stopword_count_fused)."""
-    return {lang: stopword_count_fused(text, words)
-            for lang, words in LANG_STOPWORDS.items()}
-
-
 def _argmax_lang(scores: Dict[str, Column]) -> Column:
     """Argmax over per-language score columns; 'und' if all 0. First-listed
     language wins ties (deterministic)."""
@@ -143,14 +135,6 @@ def _argmax_lang(scores: Dict[str, Column]) -> Column:
                 cond = cond & (scores[lang] >= scores[other])
         expr = F.when(cond, F.lit(lang)) if expr is None else expr.when(cond, F.lit(lang))
     return expr.otherwise(F.lit("und"))
-
-
-def lang_id(text: Column) -> Column:
-    """Argmax of per-language stopword scores; 'und' (undetermined) if all 0.
-    NOTE: inlines every language's score expression into each when-branch —
-    for whole-table scans prefer text_stats, which stages the scores as
-    columns so each regex runs once per row."""
-    return _argmax_lang(lang_scores(text))
 
 
 def content_fingerprint(text: Column) -> Column:
@@ -517,7 +501,8 @@ def ngram_counts(df: DataFrame, text_col: str = "text", n: int = 2,
     `_grams` chain, ~7× faster — r12); the only shuffle is the count
     groupBy (map-side partial agg), and the top-k is
     TakeOrderedAndProject."""
-    from .dedup import _grams, _let, gram_extract
+    from ..functions import _let
+    from .dedup import _grams, gram_extract
 
     gram = (gram_extract(F.lower(F.col(text_col)), n) if n >= 2
             else _let(tokens(F.lower(F.col(text_col))),
@@ -713,7 +698,7 @@ def char_entropy(df: DataFrame, text_col: str = "text",
     order-independent — bit-identical to a SQL oracle whose per-group
     summation order is unspecified. Empty/NULL text yields entropy 0.
     Returns (id_col, n_chars_counted, entropy)."""
-    from .dedup import _let
+    from ..functions import _let
 
     def build(srt: Column) -> Column:
         n = F.size(srt)
@@ -771,7 +756,8 @@ def ngram_novelty(df: DataFrame, text_col: str = "text",
     pairs ⋈ firsts on gram (hash equi join; fan-out per gram = #docs
     containing it, never all-pairs) → per-doc groupBy. Documents with no
     n-gram (< n tokens) are absent from the result."""
-    from .dedup import _grams, _let, gram_extract
+    from ..functions import _let
+    from .dedup import _grams, gram_extract
 
     if n >= 2:
         # codegen'd regex gram pass (dedup.gram_extract) — the empty-token

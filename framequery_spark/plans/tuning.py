@@ -3,6 +3,9 @@
 One place for the runtime confs the engine relies on. `configure_session`
 applies them idempotently; callers pass the target parallelism (executor
 cores × executors on a cluster; local CPU count on local[N]).
+`local_session` is the one local[N] session factory for bench.py and the
+scripts under tools/: it sets only the static confs, then applies
+`configure_session`.
 
 The 100 TB rationale per conf:
   - AQE + coalesce/skew-join: runtime re-planning fixes both over-partitioned
@@ -17,6 +20,9 @@ The 100 TB rationale per conf:
 """
 
 from __future__ import annotations
+
+import os
+from typing import Optional
 
 from pyspark.sql import SparkSession
 
@@ -48,8 +54,6 @@ def configure_session(spark: SparkSession, parallelism: int = None) -> SparkSess
     # (never set by the driver, so recorded benches always run the
     # defaults above; cluster deployments use it for site-specific
     # values without editing code)
-    import os
-
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in extra.split(";"):
         if "=" in pair:
@@ -62,3 +66,38 @@ def configure_session(spark: SparkSession, parallelism: int = None) -> SparkSess
         except Exception:
             pass  # static conf on a running session — keep going
     return spark
+
+
+def local_session(cpus: int, app_name: str,
+                  ui_port: Optional[int] = None) -> SparkSession:
+    """A local[cpus] session with the static confs (driver memory from
+    SPARK_GRAFT_MEM, default 64g; code-cache JVM flags; the UI only when
+    `ui_port` is given, for probes that read stage metrics over its REST
+    API), log level ERROR, and `configure_session(spark, cpus)`."""
+    builder = (
+        SparkSession.builder
+        .master(f"local[{cpus}]")
+        .appName(app_name)
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "64g"))
+        # A 150+-entry bench x (warmup + reps) generates thousands of
+        # Janino classes; when the code cache fills, the JIT disables or
+        # thrashes and entries intermittently read 5-10x their steady
+        # state (measured r09 with the JDK default 240 MB:
+        # op_dsir_select [6.0, 4.6, 4.0, 3.7, 11.1, 23.1] idle-host vs
+        # [.., 2.3, 2.6, 2.4, 2.0, 2.0] cache-sized — the BENCH_r08
+        # 12.6 s anomaly). 1 GiB stopped sufficing when the inventory
+        # crossed ~150 entries: op_semdedup read [1.3, 2.7, 6.4, 6.3]
+        # in-suite vs 0.8 s solo with 1g, and [1.7, (10.1 stall), 3.9,
+        # 1.2, 1.1] with 2g — the flushing-evicts-hot-GEMM-methods
+        # signature. Reservation is virtual; flushing evicts cold
+        # methods instead of stopping C2.
+        .config("spark.driver.extraJavaOptions",
+                "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing")
+        .config("spark.ui.enabled", "false" if ui_port is None else "true")
+    )
+    if ui_port is not None:
+        builder = (builder.config("spark.ui.port", str(ui_port))
+                   .config("spark.ui.retainedStages", "5000"))
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return configure_session(spark, cpus)

@@ -70,16 +70,9 @@ def _stream_partitions(spark: SparkSession, path: str | None,
     op_stateful_counts/op_stream_funnel — per-group pandas overhead times
     ~1.5k users on one worker), and foreachBatch bodies are full batch
     join/aggregate pipelines that need real parallelism. Those call sites
-    keep the previous 8 as the floor and still scale up with data.
-
-    SPARK_GRAFT_STREAM_PARTS overrides for deployments whose state size
-    is not proportional to one drain's source bytes (e.g. long-running
-    complete-mode aggregations over small batches)."""
+    keep the previous 8 as the floor and still scale up with data."""
     import os
 
-    override = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "")
-    if override.strip():
-        return max(1, int(override))
     cores = spark.sparkContext.defaultParallelism
     total = 0
     try:

@@ -94,24 +94,39 @@ def test_scalar_subquery_is_broadcast(spark, scope):
 
 
 def test_bucketed_join_has_no_exchange(spark, scope):
-    from framequery_spark.sources.bucketed import bucketed_join, save_bucketed
+    """Bucketing contract: two tables bucketed on the same key and count
+    join as SortMergeJoin with ZERO Exchange — the write-time shuffle is
+    reused. Each table is written twice under one name, the first time
+    over an orphaned warehouse location, so re-creation is covered too."""
+    import os
+    from urllib.parse import urlparse
 
-    save_bucketed(scope["orders"], "b_orders", ["o_custkey"], buckets=8)
-    save_bucketed(scope["customer"], "b_customer", ["c_custkey"], buckets=8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    from framequery_spark.sources.bucketing import write_bucketed
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    orphan = os.path.join(urlparse(warehouse).path or warehouse, "b_orders")
+    os.makedirs(orphan, exist_ok=True)
+    open(os.path.join(orphan, "stale.parquet"), "w").close()
+    old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        joined = (spark.table("b_orders")
-                  .join(spark.table("b_customer"),
-                        spark.table("b_orders").o_custkey
-                        == spark.table("b_customer").c_custkey))
+        for _ in range(2):
+            o = write_bucketed(scope["orders"], "b_orders", ["o_custkey"], 8,
+                               sort_cols=["o_custkey"])
+            c = write_bucketed(scope["customer"], "b_customer",
+                               ["c_custkey"], 8, sort_cols=["c_custkey"])
+        joined = o.join(c, o.o_custkey == c.c_custkey)
         plan = formatted_plan(joined)
+        assert "SortMergeJoin" in plan, plan
+        assert "Exchange" not in plan, plan
+        assert joined.count() == scope["orders"].count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert "SortMergeJoin" in plan, plan
-    assert "Exchange" not in plan, plan
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+        spark.sql("DROP TABLE IF EXISTS b_orders")
+        spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
 def test_gcd_lcm_stay_jvm_side(spark, scope):

@@ -37,22 +37,11 @@ def main():
     suffix = sys.argv[1]
     names = sys.argv[2:] or DEFAULT_ENTRIES
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from framequery_spark.plans.tuning import local_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false")
-             .appName("capture_plans").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    from framequery_spark.plans.tuning import configure_session
-
-    configure_session(spark, cpus)
+    spark = local_session(cpus, "capture_plans")
 
     qs = entry.queries()
     streaming = getattr(entry, "STREAMING_ENTRIES", frozenset())

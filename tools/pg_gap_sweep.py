@@ -267,13 +267,9 @@ def main():
     only = None
     if "--only" in sys.argv:
         only = sys.argv[sys.argv.index("--only") + 1]
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[4]")
-             .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    from framequery_spark.plans.tuning import local_session
+
+    spark = local_session(4, "pg_gap_sweep")
     scope = {"test": TEST, "names": NAMES, "tsless": TS, "arr": ARR,
              "doc": DOC}
     sscope = {k: spark.createDataFrame(v) for k, v in scope.items()}

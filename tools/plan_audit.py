@@ -50,19 +50,10 @@ def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "reports", "r12_plan_audit.tsv")
-    from pyspark.sql import SparkSession
+    from framequery_spark.plans.tuning import local_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false")
-             .appName("plan_audit").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    from framequery_spark.plans.tuning import configure_session
-
-    configure_session(spark, cpus)
+    spark = local_session(cpus, "plan_audit")
 
     import __spark_entry__ as entry
 

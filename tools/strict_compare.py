@@ -32,15 +32,11 @@ def _tolerated(st, dt) -> bool:
 
 def main(names):
     import duckdb
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from framequery_spark.plans.tuning import local_session
 
-    spark = (SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "8g")
-             .appName("strict_compare").getOrCreate())
+    spark = local_session(int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+                          "strict_compare")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "

@@ -49,29 +49,10 @@ ENTRIES = [
 
 
 def build_session(cpus: int = 32):
-    from pyspark.sql import SparkSession
+    from framequery_spark.plans.tuning import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("framequery_spark_tpch_scale_probe")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_MEM", "64g"))
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.ui.retainedStages", "5000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from framequery_spark.plans.tuning import configure_session
-
-    configure_session(spark, cpus)
-    return spark
+    # the UI is the REST metrics source for the per-run shuffle/spill rows
+    return local_session(cpus, "framequery_spark_tpch_scale_probe", ui_port=UI_PORT)
 
 
 def derive_dir(spark, factor: int) -> str:
