@@ -31,8 +31,15 @@ from .expressions import (
     _bt,
 )
 from .rewrite import contains_aggregate, map_children, transform
-from ..operators.cache import local_checkpoint_tracked as _ckpt_tracked
+from ..operators.cache import (local_checkpoint_tracked as _ckpt_tracked,
+                               note_compile_materialization,
+                               persist_tracked, release_one)
 from ..sources.local_relation import local_relation as _local_relation
+
+
+# UNION ALL recursive-CTE steps chained per materialized block (see
+# _compile_recursive_cte)
+_RECURSIVE_UNROLL = 4
 
 
 class QueryCompiler:
@@ -196,8 +203,6 @@ class QueryCompiler:
         if threshold > 0:
             rows = df.take(threshold + 1)
             if len(rows) <= threshold:
-                from ..operators.cache import note_compile_materialization
-
                 # the resulting plan embeds materialized rows → the
                 # executor's plan cache must skip this statement
                 note_compile_materialization()
@@ -283,7 +288,7 @@ class QueryCompiler:
         # step is already exactly one tiny job, so there are no driver
         # round-trips left for unrolling to amortize.
         unroll = 1 if distinct or search is not None or cycle is not None \
-            else max(1, int(getattr(self.session, "recursive_unroll", 4)))
+            else _RECURSIVE_UNROLL
         step_scope = dict(self.scope)
         rounds = 0
         while True:
@@ -319,13 +324,9 @@ class QueryCompiler:
                 depths.append(rounds)
             else:
                 if len(block) > 1:
-                    from ..operators.cache import persist_tracked
-
-                    # tracked (r13): a bare .persist() here could not be
-                    # freed by release_cached() — the same leak class the
-                    # r12 checkpoint tracking fixed; block persists are
-                    # consumed within this compile (union + frontier
-                    # checkpoint below), released with everything else
+                    # block persists are consumed within this compile
+                    # (union + frontier checkpoint below) and released
+                    # with release_one once the frontier is checkpointed
                     for i, b in enumerate(block):
                         block[i] = persist_tracked(b)
                 new_rows = block[0]
@@ -351,7 +352,7 @@ class QueryCompiler:
                         n_f = None
                 if len(block) > 1:
                     for b in block:
-                        b.unpersist()
+                        release_one(b)
                 if (n_new == 0) if n_new is not None \
                         else new_rows.isEmpty():
                     break

@@ -1051,12 +1051,13 @@ def _capture_caller_scope(spark: SparkSession, depth: int = 2) -> dict:
 #     no DML/DDL side effects),
 #   - the SQL mentions no volatile/time/sequence function (conservative
 #     textual screen; false positives only cost a cache miss),
-#   - compiling registered no tracked persist/localCheckpoint and no
-#     compile-time materialization (recursive CTEs and correlated-theta
-#     decorrelation materialize during compile; rebuilding from their
-#     analyzed plan would reference released checkpoint blocks — or, for
-#     the driver-local recursive frontier path, replay frozen LocalRelation
-#     rows instead of recomputing),
+#   - compiling registered nothing: operators.cache.REGISTRATIONS did not
+#     move, so no tracked resource and no compile-time materialization
+#     (recursive CTEs and correlated-theta decorrelation materialize
+#     during compile; rebuilding from their analyzed plan would reference
+#     released checkpoint blocks — or, for the driver-local recursive
+#     frontier path, replay frozen LocalRelation rows instead of
+#     recomputing),
 #   - scope values are all Spark DataFrames (identity-keyed).
 _PLAN_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
 _PLAN_CACHE_MAX = 256
@@ -1131,9 +1132,7 @@ def execute(q: str, scope: Optional[dict] = None,
 
     from ..operators import cache as _opcache
 
-    n_persist = len(_opcache._TRACKED)
-    n_ckpt = len(_opcache._TRACKED_CKPT)
-    n_mat = _opcache.COMPILE_MATERIALIZATIONS
+    n_reg = _opcache.REGISTRATIONS
     try:
         node = parse(q)
     except Exception:
@@ -1143,9 +1142,7 @@ def execute(q: str, scope: Optional[dict] = None,
     if (key is not None and isinstance(out, DataFrame)
             and isinstance(node, (ast.Select, ast.SetOp, ast.Pivot,
                                   ast.Unpivot))
-            and len(_opcache._TRACKED) == n_persist
-            and len(_opcache._TRACKED_CKPT) == n_ckpt
-            and _opcache.COMPILE_MATERIALIZATIONS == n_mat):
+            and _opcache.REGISTRATIONS == n_reg):
         try:
             refs = _scope_refs(scope)
             if refs is not None:

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cache import broadcast_tracked
+
 __all__ = ["suggest_params", "build_bloom_words", "bloom_dedup_against"]
 
 # Hard cap on the dense bitset the driver materializes and broadcasts
@@ -118,10 +120,11 @@ def bloom_dedup_against(new: DataFrame, corpus: DataFrame, keys: List[str],
     Key columns must be non-null on both sides (xxhash64 of NULL collides
     for all rows; SQL anti-join semantics for NULL keys keep the row, which
     the bloom path also does only if positions still miss) — pre-filter
-    nulls if the key is nullable.
+    nulls if the key is nullable. The bitset broadcast is registered with
+    operators.cache, so release_cached() unpersists it.
     """
     bits = build_bloom_words(corpus, keys, num_bits, num_hashes, seed)
-    bc = new.sparkSession.sparkContext.broadcast(bits)
+    bc = broadcast_tracked(new.sparkSession, bits)
 
     @F.pandas_udf("boolean")
     def might_contain(pos_ser: pd.Series) -> pd.Series:

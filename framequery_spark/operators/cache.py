@@ -1,34 +1,38 @@
-"""Tracked persistence for multi-consumer operator intermediates.
+"""One registry of the resources engine calls hold between calls.
 
-Several operators persist an intermediate that feeds multiple plan branches
-(shingle/gram streams, MinHash signatures): without the persist the
-expensive stream recomputes once per consumer. Because operators return
-*lazy* DataFrames, the persist cannot be released inside the operator — the
-caller has not materialized anything yet — so a bare ``.persist()`` would
-leak cached partitions for the session lifetime in a long-lived
-:class:`~framequery_spark.executor.executor.Executor` that runs dedup ops
-repeatedly.
+Operators return *lazy* DataFrames, so whatever they persist to feed several
+plan branches (shingle/gram streams, MinHash signatures, loop checkpoints)
+cannot be released inside the operator — the caller has not materialized
+anything yet. Every such resource is registered here instead, in the one
+list ``_TRACKED``, and released later by :func:`release_cached` (all of
+them) or :func:`release_one` (one persist). Nothing outside this module
+calls ``.persist()``, ``.cache()``, ``.localCheckpoint()`` or
+``sparkContext.broadcast()`` (tests/test_cache_discipline.py scans for it),
+and a user's own caches are never registered, so they are never released.
 
-This module is the discipline: operators call :func:`persist_tracked`
-instead of ``.persist()``, and
+Each entry belongs to one of two release classes:
 
-- callers that materialized the result release everything with
-  :func:`release_cached` (tests and ``bench.py`` do this per entry);
-- every ``__spark_entry__`` op callable releases the *previous* op's
-  leftovers on invocation, so repeated op calls hold at most one op's
-  working set;
-- unpersisting a PERSIST is always safe — a later re-materialization of a
-  released result silently recomputes without the cache. A released
-  LOCAL CHECKPOINT (:func:`local_checkpoint_tracked`) is different:
-  localCheckpoint truncates lineage, so a checkpointed result read AFTER
-  release fails (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) instead of
-  recomputing. The discipline is the same — callers release only after
-  materializing what they need — but the failure mode is loud, not a
-  silent recompute.
+- **recompute-safe**: DataFrame persists (:func:`persist_tracked`) and
+  broadcasts (:func:`broadcast_tracked`). Releasing one is always safe — a
+  later read of a still-lazy result recomputes the persist or re-ships the
+  broadcast.
+- **pinned**: local checkpoints (:func:`local_checkpoint_tracked`) and
+  streaming memory-sink views (:func:`track_temp_view`). A checkpoint
+  truncates lineage, so a read after release FAILS
+  (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) instead of recomputing; a released
+  sink view no longer resolves by name. ``release_cached(checkpoints=False)``
+  — the hook the ``__spark_entry__`` op wrappers fire between calls —
+  releases the recompute-safe class only; explicit callers that have
+  materialized everything (bench reps, tests, teardown) release both.
+
+``REGISTRATIONS`` counts every registration, monotonically, plus the
+compile-time materializations that hold nothing
+(:func:`note_compile_materialization`). The executor's plan cache stores a
+compiled plan only when the count did not move during the compile.
 """
 from __future__ import annotations
 
-from typing import List
+from typing import Callable, List, Tuple
 
 from pyspark.sql import DataFrame
 
@@ -38,114 +42,117 @@ try:
 except Exception:  # pragma: no cover
     _DEFAULT_LEVEL = None
 
-# strong refs on purpose: the JVM-side cache exists regardless of whether
-# the Python handle stays reachable, so the registry must keep the handle
-# alive until release_cached() can unpersist it. The handles themselves are
-# tiny (plan pointers, no data).
-_TRACKED: List[DataFrame] = []
+# (handle, release(blocking), pinned). Persist and broadcast handles are
+# strong refs on purpose: the cached blocks exist on the JVM side whether or
+# not the Python handle stays reachable, so the registry keeps the handle
+# alive until it is released. Checkpoints and views are held by RDD id and
+# by name. No handle carries data.
+_TRACKED: List[Tuple[object, Callable[[bool], object], bool]] = []
+REGISTRATIONS = 0
 
-# Monotone counter of compile-time materializations that leave NO tracked
-# handle behind (the recursive-CTE driver-local frontier path collects rows
-# into LocalRelations instead of checkpointing). The executor's plan cache
-# diffs this counter around a compile exactly like the two registries: a
-# plan that embeds materialized rows must never be cached — rebuilding it
-# would replay frozen data instead of recomputing from the sources.
-COMPILE_MATERIALIZATIONS = 0
+
+def _register(handle, release: Callable[[bool], object],
+              pinned: bool) -> None:
+    global REGISTRATIONS
+    _TRACKED.append((handle, release, pinned))
+    REGISTRATIONS += 1
 
 
 def note_compile_materialization() -> None:
-    global COMPILE_MATERIALIZATIONS
-    COMPILE_MATERIALIZATIONS += 1
-
-
-# RDD ids persisted by local_checkpoint_tracked: localCheckpoint persists
-# its materialized RDD OUTSIDE the DataFrame cache registry (neither
-# df.unpersist() nor catalog.clearCache() drops it), so without explicit
-# tracking every checkpointing operator call leaks one persisted RDD until
-# the driver GC happens to collect the handle — bench.py's per-rep
-# cache_diag measured exactly that (+1 persistent RDD per rep for the
-# MMR / connected-components entries). Entries are (SparkContext, rdd_id).
-_TRACKED_CKPT: List[tuple] = []
-
-
-def local_checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` + registration of the persisted RDD
-    for :func:`release_cached`. The returned DataFrame must not be read
-    again after release (checkpoint blocks are gone — callers hold
-    checkpoints only within an operator invocation, and release happens
-    between invocations). Id discovery diffs the persistent-RDD map
-    around the checkpoint call; safe for the library's single-threaded
-    operator construction."""
-    sc = df.sparkSession.sparkContext
-    try:
-        before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    except Exception:  # pragma: no cover — py4j unavailable shapes
-        return df.localCheckpoint(eager)
-    out = df.localCheckpoint(eager)
-    try:
-        after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        for rid in after - before:
-            _TRACKED_CKPT.append((sc, rid))
-    except Exception:  # pragma: no cover
-        pass
-    return out
+    """Count a compile-time materialization that holds nothing (the
+    recursive-CTE driver-local frontier collects rows into a
+    LocalRelation): a plan that embeds materialized rows must never be
+    plan-cached — rebuilding it would replay frozen data instead of
+    recomputing from the sources."""
+    global REGISTRATIONS
+    REGISTRATIONS += 1
 
 
 def persist_tracked(df: DataFrame, level=None) -> DataFrame:
-    """``df.persist(level)`` + registration for later :func:`release_cached`."""
+    """``df.persist(level)``, registered as recompute-safe."""
     df = df.persist(level if level is not None else _DEFAULT_LEVEL)
-    _TRACKED.append(df)
+    _register(df, df.unpersist, pinned=False)
     return df
 
 
+def local_checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, registered as pinned. localCheckpoint
+    persists its RDD outside the DataFrame cache manager (neither
+    ``df.unpersist()`` nor ``catalog.clearCache()`` drops it), so the
+    registry records that RDD's id, read off the checkpoint's own analyzed
+    plan (a ``LogicalRDD`` over exactly the persisted RDD, eager or not),
+    and release unpersists it by id. Holding the id, not the RDD, leaves a
+    checkpoint nothing references to the ContextCleaner. The returned
+    DataFrame must not be read after a full release."""
+    out = df.localCheckpoint(eager)
+    try:
+        jsc = df.sparkSession.sparkContext._jsc
+        rid = out._jdf.queryExecution().analyzed().rdd().id()
+    except Exception:  # pragma: no cover — py4j unavailable shapes
+        return out
+    _register(rid, lambda blocking: jsc.sc().unpersistRDD(rid, blocking),
+              pinned=True)
+    return out
+
+
+def broadcast_tracked(spark, value):
+    """``sparkContext.broadcast(value)``, registered as recompute-safe
+    (unpersist drops the executor copies; a later use re-ships them)."""
+    bc = spark.sparkContext.broadcast(value)
+    _register(bc, bc.unpersist, pinned=False)
+    return bc
+
+
+def track_temp_view(spark, name: str) -> None:
+    """Register the session temp view ``name`` (a streaming memory sink,
+    whose rows live in driver memory until the view is dropped) as
+    pinned; release drops the view. Dropping a view that was never
+    created is a no-op, so callers may register before creating it."""
+    _register(name, lambda blocking: spark.catalog.dropTempView(name),
+              pinned=True)
+
+
 def release_one(df: DataFrame) -> None:
-    """Unpersist one tracked intermediate and drop it from the registry —
-    for operators that own a persist with a bounded lifetime (a training
-    loop) while the caller may hold OTHER tracked persists that must
-    survive (release_cached would drop those too)."""
+    """Unpersist one tracked persist and drop it from the registry — for
+    operators that own a persist with a bounded lifetime (a training loop,
+    a recursive-CTE block) while the caller may hold OTHER tracked
+    resources that must survive (release_cached would drop those too)."""
+    for i, (handle, _, _) in enumerate(_TRACKED):
+        if handle is df:
+            del _TRACKED[i]
+            break
     try:
         df.unpersist(False)
     except Exception:  # pragma: no cover — session already stopped
-        pass
-    try:
-        _TRACKED.remove(df)
-    except ValueError:
         pass
 
 
 def release_cached(blocking: bool = False,
                    checkpoints: bool = True) -> int:
-    """Unpersist every tracked intermediate; returns the number released.
-    Idempotent; safe to call while results are still lazy (they recompute
-    uncached). Default is non-blocking (fire-and-forget block removal);
-    pass ``blocking=True`` when the next measurement must not overlap the
-    async removal — back-to-back bench reps with non-blocking release can
-    accumulate cached blocks faster than the async cleaner drops them,
-    which reads as monotonically rising rep times.
+    """Release every tracked resource; returns the number released.
+    Idempotent; safe while results are still lazy as far as the
+    recompute-safe class goes. Default is non-blocking (fire-and-forget
+    block removal); pass ``blocking=True`` when the next measurement must
+    not overlap the async removal — back-to-back bench reps with
+    non-blocking release can accumulate cached blocks faster than the
+    async cleaner drops them, which reads as monotonically rising rep
+    times.
 
-    ``checkpoints=False`` releases only the plain persists and leaves
-    tracked localCheckpoints for the ContextCleaner — a released
-    checkpoint FAILS on re-read (lineage truncated) instead of
-    recomputing, so auto-release hooks that fire between operator calls
-    (the ``__spark_entry__`` wrappers) opt out to preserve the
-    every-result-stays-readable invariant; explicit callers that have
-    materialized everything (bench reps, tests, session teardown) keep
-    the full default."""
+    ``checkpoints=False`` keeps the pinned class (checkpoints, sink views)
+    registered and releases only the recompute-safe one, preserving the
+    every-result-stays-readable invariant for auto-release hooks."""
     released = 0
+    kept = []
     while _TRACKED:
-        df = _TRACKED.pop()
+        entry = _TRACKED.pop()
+        _, release, pinned = entry
+        if pinned and not checkpoints:
+            kept.append(entry)
+            continue
         try:
-            df.unpersist(blocking)
+            release(blocking)
             released += 1
         except Exception:  # session already stopped — nothing to release
             pass
-    while checkpoints and _TRACKED_CKPT:
-        sc, rid = _TRACKED_CKPT.pop()
-        try:
-            jmap = sc._jsc.getPersistentRDDs()
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist(blocking)
-                released += 1
-        except Exception:  # session already stopped
-            pass
+    _TRACKED.extend(reversed(kept))
     return released

@@ -140,15 +140,25 @@ def event_rate_anomaly(df: DataFrame, type_col: str = "event_type",
     counts = (df.groupBy(F.col(type_col).alias("etype"),
                          period.alias("bucket"))
                 .agg(F.count(F.lit(1)).alias("n")))
+    return score_rate_counts(counts, type_col, z_threshold)
+
+
+def score_rate_counts(counts: DataFrame, type_col: str = "event_type",
+                      z_threshold: float = 3.0) -> DataFrame:
+    """The z-scoring half of :func:`event_rate_anomaly`, over finished
+    ``(etype, bucket, n)`` counts — shared with the streaming monitor,
+    whose counts come out of a streaming aggregation instead."""
     dec = "decimal(38,0)"
     # n is cast to decimal BEFORE squaring: bigint*bigint wraps silently
     # past ~3e9 events per bucket — exactly the scale this module claims
     n_dec = F.col("n").cast(dec)
-    stats = (counts.groupBy("etype")
+    # the stats side renames its key, so this self-join stays resolvable
+    # over a leaf Spark cannot re-instance (a streaming memory sink)
+    stats = (counts.groupBy(F.col("etype").alias("__t"))
              .agg(F.count(F.lit(1)).alias("__k"),
                   F.sum(n_dec).alias("__s"),
                   F.sum((n_dec * n_dec).cast(dec)).alias("__s2")))
-    j = counts.join(F.broadcast(stats), "etype")
+    j = counts.join(F.broadcast(stats), F.col("etype") == F.col("__t"))
     k = F.col("__k").cast("double")
     s = F.col("__s").cast("double")
     s2 = F.col("__s2").cast("double")

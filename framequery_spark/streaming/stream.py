@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import uuid
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,22 +32,6 @@ def scratch_dir() -> str:
     shm = "/dev/shm"
     return shm if os.path.isdir(shm) and os.access(shm, os.W_OK) \
         else tempfile.gettempdir()
-
-
-@contextlib.contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int):
-    """Cap shuffle partitions while a streaming query runs (the number of
-    state-store instances — each with its own checkpoint files, delta/
-    snapshot writes and commit per micro-batch — is fixed from this setting
-    at the first batch). Restored after the drain; the downstream batch
-    reads of the sink are unaffected."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def _stream_partitions(spark: SparkSession, path: str | None,
@@ -87,6 +69,25 @@ def _stream_partitions(spark: SparkSession, path: str | None,
     if total <= 0:
         return min(8, max(1, cores))  # unknown source: the old default
     return max(1, min(cores, max(floor, total // (64 << 20) + 1)))
+
+
+def _drain(spark: SparkSession, writer, src_path: str | None,
+           floor: int = 1) -> None:
+    """Run a configured ``DataStreamWriter`` to completion
+    (Trigger.AvailableNow) with shuffle partitions sized by
+    :func:`_stream_partitions` — the number of state-store instances, each
+    with its own checkpoint files, delta/snapshot writes and commit per
+    micro-batch, is fixed from this setting at the first batch. The
+    setting is restored in ``finally``, also when the query fails; the
+    downstream batch reads of the sink are unaffected."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(_stream_partitions(spark, src_path, floor)))
+    try:
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        spark.conf.set(key, old)
+
 
 def read_parquet_stream(spark: SparkSession, path: str,
                         max_files_per_trigger: int | None = None
@@ -175,21 +176,11 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     nanosAsLong legacy flag) materializes parquet TIMESTAMP(NANOS) as
     LongType raw nanos while Spark >=4.1 reads it natively as
     TIMESTAMP_NTZ, and declaring the wrong one either errors or silently
-    rescales the values. FileStreamSource wants a directory — a single-file
-    path is turned into (parent dir + pathGlobFilter)."""
-    import os
-
+    rescales the values (the flag is set before the probe)."""
     from ..sources.testdata import normalize_ts_column
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isfile(path):
-        parent, fname = os.path.split(path)
-        reader = reader.option("pathGlobFilter", fname)
-        path = parent
-    raw = reader.parquet(path)
-    return normalize_ts_column(raw, "ts")
+    return normalize_ts_column(read_parquet_stream(spark, path), "ts")
 
 
 def windowed_event_stats(events: DataFrame, window: str = "1 hour",
@@ -213,24 +204,25 @@ def _run_to_memory(spark: SparkSession, agg: DataFrame, prefix: str,
     memory sink) and return the sink table as a DataFrame. The checkpoint
     lives on tmpfs-preferred scratch (offset/commit logs fsync per
     micro-batch — RAM-backed logs shave the fixed per-query cost) and is
-    removed after the drain. `src_path` sizes the state-store count to the
+    removed after the drain, also when the query fails. The sink's temp
+    view holds its rows in driver memory; it is registered with
+    operators.cache before the drain, so release_cached() drops it even
+    after a failed query. `src_path` sizes the state-store count to the
     source (see _stream_partitions)."""
     import os
     import shutil
 
+    from ..operators.cache import track_temp_view
+
     name = prefix + uuid.uuid4().hex[:12]
     ckpt = os.path.join(scratch_dir(), "fq_stream_ckpt", name)
-    with _stream_shuffle_partitions(
-            spark, _stream_partitions(spark, src_path, parts_floor)):
-        q = (agg.writeStream
-             .format("memory")
-             .queryName(name)
-             .outputMode(mode)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    track_temp_view(spark, name)
+    try:
+        _drain(spark, agg.writeStream.format("memory").queryName(name)
+               .outputMode(mode).option("checkpointLocation", ckpt),
+               src_path, parts_floor)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -308,17 +300,12 @@ def stream_events_to_parquet(spark: SparkSession, events_path: str,
     Trigger.AvailableNow drains the source and stops, so the function is
     synchronous; returns a batch DataFrame over the written output."""
     stream = read_event_stream(spark, events_path)
-    with _stream_shuffle_partitions(spark,
-                                    _stream_partitions(spark, events_path)):
-        q = (stream.writeStream
-             .format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .partitionBy(*partition_by)
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    _drain(spark, stream.writeStream
+           .format("parquet")
+           .option("path", out_dir)
+           .option("checkpointLocation", checkpoint_dir)
+           .partitionBy(*partition_by)
+           .outputMode("append"), events_path)
     return spark.read.parquet(out_dir)
 
 
@@ -358,14 +345,8 @@ def stream_ingest_dedup(spark: SparkSession, docs_path: str,
                             num_perm=num_perm, bands=bands)
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    with _stream_shuffle_partitions(
-            spark, _stream_partitions(spark, docs_path, floor=8)):
-        q = (stream.writeStream
-             .foreachBatch(screen)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(screen)
+           .option("checkpointLocation", checkpoint_dir), docs_path, floor=8)
     # partition discovery over batch=<id>/ dirs appends a `batch` column;
     # drop it so the streaming result is schema-identical to the batch
     # dedup_against oracle it provably equals
@@ -575,54 +556,26 @@ def stream_event_anomaly(spark: SparkSession, events_path: str,
     """Streaming rate-anomaly monitor: the per-(type, bucket) counts
     accumulate in a REAL streaming aggregation (Trigger.AvailableNow,
     complete mode — the same watermark-free windowed-count shape as
-    run_stream_to_df), then the z-scoring joins the finished micro-batch
-    output exactly like the batch operator. An AvailableNow replay
-    therefore equals events.py:event_rate_anomaly row-for-row, so this
-    entry reuses its oracle.
+    run_stream_to_df), then the batch operator's own scoring half
+    (events.score_rate_counts) scores the finished output. An
+    AvailableNow replay therefore equals events.py:event_rate_anomaly
+    row-for-row, so this entry reuses its oracle.
 
     Streaming state = one counter per (type, bucket) — bounded by the
     observed type x bucket grid, never event count; the z-score pass is
     a bounded-aggregate batch job over the sink table.
     """
-    from ..operators.events import event_rate_anomaly
+    from ..operators.events import score_rate_counts
 
     if bucket not in ("minute", "hour", "day", "week"):
         raise ValueError("bucket must be minute, hour, day or week")
     stream = read_event_stream(spark, events_path)
     counts = (stream.groupBy(
-        F.col("event_type"),
+        F.col("event_type").alias("etype"),
         F.date_trunc(bucket, F.col("ts")).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n")))
     done = _run_to_memory(spark, counts, "anomaly_", src_path=events_path)
-    # re-shape the finished counts into an event-grain frame is not
-    # needed: score the counts directly with the batch operator's exact
-    # stats formula by re-aggregating per type
-    exploded = done.select(
-        F.col("event_type"), F.col("bucket"), F.col("n"))
-    # inline the batch z-score over the counter table (identical math to
-    # events.event_rate_anomaly, which starts from the same counts)
-    dec = "decimal(38,0)"
-    n_dec = F.col("n").cast(dec)
-    stats = (exploded.groupBy(F.col("event_type").alias("etype"))
-             .agg(F.count(F.lit(1)).alias("__k"),
-                  F.sum(n_dec).alias("__s"),
-                  F.sum((n_dec * n_dec).cast(dec)).alias("__s2")))
-    j = exploded.join(
-        F.broadcast(stats),
-        exploded["event_type"] == stats["etype"])
-    k = F.col("__k").cast("double")
-    s = F.col("__s").cast("double")
-    s2 = F.col("__s2").cast("double")
-    mean = s / k
-    var = F.when(F.col("__k") > 1, (s2 - s * s / k) / (k - 1.0)) \
-           .otherwise(F.lit(0.0))
-    std = F.sqrt(var)
-    z = F.when(std > 0, (F.col("n").cast("double") - mean) / std) \
-         .otherwise(F.lit(0.0))
-    return j.select(
-        F.col("event_type"), F.col("bucket"), F.col("n"),
-        F.round(z, 4).alias("z"),
-        (F.abs(z) >= F.lit(float(z_threshold))).alias("is_anomaly"))
+    return score_rate_counts(done, "event_type", z_threshold)
 
 
 def stream_upsert_latest(spark: SparkSession, events_path: str,
@@ -677,12 +630,7 @@ def stream_upsert_latest(spark: SparkSession, events_path: str,
         latest.write.mode("overwrite").parquet(nxt)
         state["v"] = 1 - state["v"]
 
-    with _stream_shuffle_partitions(
-            spark, _stream_partitions(spark, events_path, floor=8)):
-        q = (stream.writeStream
-             .foreachBatch(merge)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(merge)
+           .option("checkpointLocation", checkpoint_dir), events_path,
+           floor=8)
     return spark.read.parquet(f"{out_dir}/v={state['v']}")

@@ -15,7 +15,15 @@ local_checkpoint_tracked registers the persisted RDD ids and
 release_cached() drops them explicitly. A released checkpoint read again
 FAILS (lineage was truncated) rather than recomputing — same release-after-
 materialize discipline, louder failure mode.
+
+A checkpoint is registered by the RDD id its own plan holds, so a user's
+cache first materialized inside an operator is never mistaken for one;
+streaming memory-sink views and broadcasts are registered too, and only
+operators/cache.py creates held resources.
 """
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -158,3 +166,82 @@ def test_op_results_stay_readable_across_entry_op_calls(spark):
         .collect()
     assert r1.count() == n1  # still readable — no checkpoint loss
     release_cached(blocking=True)  # full release still works
+
+
+def test_user_cache_survives_release(spark):
+    """A user's own ``edges.cache()``, first materialized inside
+    connected_components, is not the operator's to release: it stays
+    persisted after a full release, while the operator's checkpoints go."""
+    from framequery_spark.operators.cache import release_cached
+    from framequery_spark.operators.graph import connected_components
+
+    release_cached(blocking=True)
+    before = _persistent_rdd_ids(spark)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)], "a long, b long").cache()
+    connected_components(edges, "a", "b").count()
+    assert release_cached(blocking=True) >= 1
+    assert edges.is_cached
+    assert _persistent_rdd_ids(spark) - before, "the user's cache was freed"
+    edges.unpersist(blocking=True)
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"operator checkpoints leaked: {leaked}"
+
+
+def test_stream_memory_sink_view_is_pinned(spark):
+    """The memory-sink view behind a streaming result survives the
+    auto-release hook (the result stays readable) and is dropped by a
+    full release."""
+    from framequery_spark.operators.cache import release_cached
+    from framequery_spark.streaming.stream import run_stream_to_df
+
+    def views():
+        return {t.name for t in spark.catalog.listTables()}
+
+    release_cached()
+    before = views()
+    df = run_stream_to_df(spark, "/root/testdata/sf0.001/events.parquet")
+    sink = views() - before
+    assert len(sink) == 1, sink
+    n = df.count()
+    release_cached(checkpoints=False)
+    assert sink <= views()
+    assert df.count() == n
+    release_cached()
+    assert not sink & views()
+
+
+def test_bloom_broadcast_released(spark):
+    from framequery_spark.operators.bloom import bloom_dedup_against
+    from framequery_spark.operators.cache import release_cached
+
+    release_cached()
+    new = spark.createDataFrame([(f"t{i}",) for i in range(20)],
+                                "text string")
+    corpus = new.where(F.col("text") < "t5")
+    bloom_dedup_against(new, corpus, ["text"], num_bits=1024).collect()
+    assert release_cached() >= 1
+
+
+def test_only_the_registry_creates_held_resources():
+    """Every persist, cache, checkpoint and SparkContext broadcast in the
+    engine goes through operators/cache.py, so release_cached() can free
+    it. ``F.broadcast`` is a join hint, not a held resource."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "framequery_spark"
+    registry = root / "operators" / "cache.py"
+    held = {"persist", "cache", "localCheckpoint", "checkpoint"}
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path == registry:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            f = node.func
+            hint = isinstance(f.value, ast.Name) and f.value.id == "F"
+            if f.attr in held or (f.attr == "broadcast" and not hint):
+                found.append(f"{path.relative_to(root)}:{node.lineno} "
+                             f".{f.attr}(")
+    assert not found, ("held resources created outside operators/cache.py "
+                       f"(use its *_tracked helpers): {found}")
