@@ -636,7 +636,7 @@ ORDER BY lang
 
 # Theta-correlated scalar subquery (the running-rank / strictly-below-count
 # shape pg evaluates as a per-row subplan). Decorrelated by
-# expressions.py:_decorrelate_theta into one theta join + per-outer-row
+# compiler/select.py:ThetaAggregate into one theta join + per-outer-row
 # aggregate — never a per-row loop. Identical text in both dialects
 # (DuckDB decorrelates it natively).
 _q("q63_running_rank", """

@@ -942,9 +942,8 @@ class ExprCompiler:
         # (value_name, grouped DataFrame, [(outer_expr_ast, key_col_name)])
         self.pending_correlated: List[tuple] = []
         # non-equality correlated scalar subqueries, decorrelated to a
-        # theta join + per-outer-row aggregate:
-        # (value_name, inner DataFrame, [(op, outer_ast, key_col)], item_ast)
-        self.pending_theta: List[tuple] = []
+        # theta join + per-outer-row aggregate (select.ThetaAggregate)
+        self.pending_theta: List[object] = []
         # helper columns that must exist on the input relation before the
         # projection that evaluates this compiler's output runs (GROUPS
         # window frames stage a dense_rank order key here): (name, Column)
@@ -3620,9 +3619,11 @@ class ExprCompiler:
         never a per-outer-row execution) plus a left equi join attached by
         the relation compiler; missing groups yield NULL, matching SQL's
         empty-subquery semantics. Only equality correlations decorrelate
-        this way; anything else raises."""
+        this way; other comparisons take the theta plan of
+        select.ThetaAggregate, and any other correlated predicate raises.
+        The outer-reference rule is select.Correlation's."""
         from .rewrite import contains_aggregate
-        from .select import _relation_aliases, _split_conjuncts
+        from .select import Correlation, ThetaAggregate
 
         if not isinstance(sel, ast.Select) or sel.from_ is None:
             return None
@@ -3633,88 +3634,25 @@ class ExprCompiler:
             return None
         if not contains_aggregate(sel.items[0].expr, AGG_NAMES):
             return None
-        inner_aliases = _relation_aliases(sel.from_)
-        # Unqualified refs resolve inner-first (SQL scoping); one that names
-        # no inner column is an outer correlation ref (pg allows
-        # `WHERE o.k = outer_col` without qualifying outer_col). The inner
-        # relation is compiled once, lazily, just to read its column set.
-        try:
-            from .select import QueryCompiler
-
-            inner_cols = {
-                c.lower()
-                for c in QueryCompiler(self.executor, self.scope)
-                .compile_relation(sel.from_).columns}
-        except Exception:
-            inner_cols = None  # treat unqualified refs as inner (old rule)
-
-        def is_outer(ref: ast.ColumnRef) -> bool:
-            if len(ref.parts) > 1:
-                return ref.parts[0].lower() not in inner_aliases
-            return (inner_cols is not None
-                    and ref.parts[0].lower() not in inner_cols)
-
-        def has_outer(node: ast.Node) -> bool:
-            from .rewrite import walk
-
-            return any(isinstance(n, ast.ColumnRef) and is_outer(n)
-                       for n in walk(node))
-
-        _FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=",
-                 "=": "=", "<>": "<>", "!=": "!="}
-        conjs = _split_conjuncts(sel.where) if sel.where is not None else []
-        # BETWEEN is two comparisons — desugar so correlated range
-        # predicates (u.b BETWEEN t.a-2 AND t.a+2) decorrelate like any
-        # other theta pair
-        expanded: List[ast.Node] = []
-        for c in conjs:
-            if isinstance(c, ast.Between) and not c.negated:
-                expanded.append(ast.Binary(op=">=", left=c.expr, right=c.low))
-                expanded.append(ast.Binary(op="<=", left=c.expr,
-                                           right=c.high))
-            else:
-                expanded.append(c)
-        conjs = expanded
-        corr_pairs: List[tuple] = []  # (outer_ast, inner_ast)
-        theta_pairs: List[tuple] = []  # (op, outer_ast, inner_ast)
-        inner_conjs: List[ast.Node] = []
-        for c in conjs:
-            if not has_outer(c):
-                inner_conjs.append(c)
-                continue
-            if not (isinstance(c, ast.Binary) and c.op in _FLIP):
-                raise CompileError(
-                    "correlated scalar subqueries support only comparison "
-                    "correlation predicates")
-            lo, ro = has_outer(c.left), has_outer(c.right)
-            if lo and ro:
-                raise CompileError(
-                    "correlation predicate references outer columns on "
-                    "both sides")
-            # normalize to `outer op inner`
-            op, outer_ast, inner_ast = (
-                (c.op, c.left, c.right) if lo
-                else (_FLIP[c.op], c.right, c.left))
-            if has_outer(inner_ast):
-                raise CompileError("unsupported correlated predicate")
-            if op == "=":
-                corr_pairs.append((outer_ast, inner_ast))
-            else:
-                theta_pairs.append((op, outer_ast, inner_ast))
-        if not corr_pairs and not theta_pairs:
+        rule = Correlation(self.executor, self.scope, sel, lenient=True)
+        inner_where, pairs = rule.comparisons(
+            "correlated scalar subqueries support only comparison "
+            "correlation predicates",
+            "correlation predicate references outer columns on both sides")
+        if not pairs:
             return None  # uncorrelated after all
-        if theta_pairs:
-            return self._decorrelate_theta(sel, inner_conjs,
-                                           corr_pairs, theta_pairs)
-
         n = self._scalar_counter
         self._scalar_counter += 1
         val = f"__scv{n}"
+        if any(op != "=" for op, _, _ in pairs):
+            self.pending_theta.append(ThetaAggregate(
+                self.executor, self.scope, sel, [(sel.items[0].expr, val)],
+                pairs, inner_where, "__sc", n,
+                "non-equality correlated subqueries"))
+            col = F.col(val)
+            return F.first(col) if self.agg_context else col
+        corr_pairs = [(oa, ia) for _, oa, ia in pairs]
         key_names = [f"__sck{n}_{i}" for i in range(len(corr_pairs))]
-        inner_where = None
-        for c in inner_conjs:
-            inner_where = c if inner_where is None else ast.Binary(
-                op="and", left=inner_where, right=c)
         dec = ast.Select(
             items=(ast.SelectItem(expr=sel.items[0].expr, alias=val),)
             + tuple(ast.SelectItem(expr=ia, alias=kn)
@@ -3732,81 +3670,6 @@ class ExprCompiler:
         if fill is not None:
             col = F.coalesce(col, fill)
         # see _c_ScalarSubquery: constant per group inside .agg(...)
-        return F.first(col) if self.agg_context else col
-
-    def _decorrelate_theta(self, sel: ast.Select, inner_conjs,
-                           corr_pairs, theta_pairs) -> Column:
-        """Correlated scalar-aggregate subquery with non-equality
-        correlation (the running-rank / below-threshold shape):
-
-            (SELECT count(*) FROM inner i WHERE i.x < outer.x)
-
-        Decorrelated into: tag each outer row with an id, theta-join the
-        inner relation (its aggregate arguments pre-projected as hidden
-        columns), aggregate per outer id, and join the per-id result back.
-        The theta join is a real pairwise join (Spark picks broadcast
-        nested-loop when one side is small) — the cost pg pays per-row,
-        paid once as a join; equality conjuncts stay equi-join keys so the
-        pair space is bucketed whenever possible."""
-        from .rewrite import transform
-
-        n = self._scalar_counter
-        self._scalar_counter += 1
-        val = f"__scv{n}"
-        marker = f"__scm{n}"
-        hidden: List[ast.SelectItem] = [
-            ast.SelectItem(expr=ast.Literal(1, "int"), alias=marker)]
-        counter = [0]
-
-        def rewrite_aggs(node):
-            if isinstance(node, ast.Call) and node.name.lower() in AGG_NAMES \
-                    and not isinstance(node, ast.WindowCall):
-                if node.filter_where is not None or node.order_within:
-                    raise CompileError(
-                        "FILTER / ordered aggregates are not supported in "
-                        "non-equality correlated subqueries")
-                if node.star or node.name.lower() == "count" and not node.args:
-                    return ast.Call(name="count", args=(
-                        ast.ColumnRef(parts=(marker,)),))
-                new_args = []
-                for a in node.args:
-                    j = counter[0]
-                    counter[0] += 1
-                    h = f"__sca{n}_{j}"
-                    hidden.append(ast.SelectItem(expr=a, alias=h))
-                    new_args.append(ast.ColumnRef(parts=(h,)))
-                import dataclasses as _dc
-
-                return _dc.replace(node, args=tuple(new_args))
-            return node
-
-        item = transform(sel.items[0].expr, rewrite_aggs)
-        from .rewrite import walk
-
-        for sub in walk(item):
-            if isinstance(sub, ast.ColumnRef) \
-                    and not sub.parts[0].startswith("__sc"):
-                raise CompileError(
-                    "non-aggregate column references are not supported in "
-                    "non-equality correlated subqueries")
-        key_specs: List[tuple] = []  # (op, outer_ast, key_name)
-        for i, (oa, ia) in enumerate(corr_pairs):
-            kn = f"__sck{n}_e{i}"
-            hidden.append(ast.SelectItem(expr=ia, alias=kn))
-            key_specs.append(("=", oa, kn))
-        for i, (op, oa, ia) in enumerate(theta_pairs):
-            kn = f"__sck{n}_t{i}"
-            hidden.append(ast.SelectItem(expr=ia, alias=kn))
-            key_specs.append((op, oa, kn))
-        inner_where = None
-        for c in inner_conjs:
-            inner_where = c if inner_where is None else ast.Binary(
-                op="and", left=inner_where, right=c)
-        dec = ast.Select(items=tuple(hidden), from_=sel.from_,
-                         where=inner_where)
-        sub_df = self.executor._compile_query(dec, self.scope)
-        self.pending_theta.append((val, sub_df, key_specs, item))
-        col = F.col(val)
         return F.first(col) if self.agg_context else col
 
     def _empty_group_fill(self, sel: ast.Select, sub_df,

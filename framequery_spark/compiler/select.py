@@ -17,6 +17,9 @@ aggregation comes free).
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import operator
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -30,7 +33,7 @@ from .expressions import (
     _apply_sort_direction,
     _bt,
 )
-from .rewrite import contains_aggregate, map_children, transform
+from .rewrite import contains_aggregate, map_children, transform, walk
 from ..operators.cache import (local_checkpoint_tracked as _ckpt_tracked,
                                note_compile_materialization,
                                persist_tracked, release_one)
@@ -76,9 +79,6 @@ class QueryCompiler:
         — the pivot aggregation stays one (map-side partial) shuffle, with
         the value list either static (IN) or discovered by a bounded
         distinct collect of the ON column only."""
-        from .expressions import ExprCompiler
-        from .rewrite import walk
-
         src = node.source
         df = (self.compile_relation(src) if isinstance(src, ast.TableRef)
               else self.compile_query(src))
@@ -671,10 +671,8 @@ class QueryCompiler:
         verdict for outer keys with no matching group (pg evaluates the
         aggregate over zero rows there).  Returns (sub_df, cond,
         empty_pass) or None when the shape does not apply (no HAVING,
-        explicit GROUP BY, non-equality correlation — those fall through
-        to the plain path)."""
-        from .rewrite import walk
-
+        explicit GROUP BY, no correlation — those fall through to the
+        plain path); a non-equality correlation raises."""
         if not isinstance(sel, ast.Select) or sel.having is None \
                 or sel.group_by or sel.from_ is None or sel.ctes:
             return None
@@ -691,51 +689,20 @@ class QueryCompiler:
                 raise CompileError(
                     "EXISTS with HAVING supports only literal LIMIT/OFFSET")
             force_false = (lim == 0) or (off >= 1)
-        inner_rel = QueryCompiler(self.session, self.scope) \
-            .compile_relation(sel.from_)
-        inner_cols = {c.lower() for c in inner_rel.columns}
-        inner_aliases = _relation_aliases(sel.from_)
-
-        def is_outer(ref: ast.ColumnRef) -> bool:
-            if ref.qualifier is not None:
-                return ref.qualifier.lower() not in inner_aliases
-            return ref.name.lower() not in inner_cols
-
-        def has_outer(n: ast.Node) -> bool:
-            return any(isinstance(x, ast.ColumnRef) and is_outer(x)
-                       for x in walk(n))
-
-        if has_outer(sel.having):
+        rule = Correlation(self.session, self.scope, sel)
+        if rule.has_outer(sel.having):
             raise CompileError(
                 "outer references inside EXISTS ... HAVING are not "
                 "supported — move them into WHERE")
-        conjs = _split_conjuncts(sel.where) if sel.where is not None else []
-        corr: List[tuple] = []
-        inner_conjs: List[ast.Node] = []
-        for c in conjs:
-            if not has_outer(c):
-                inner_conjs.append(c)
-                continue
-            if not (isinstance(c, ast.Binary) and c.op == "="):
-                raise CompileError(
-                    "EXISTS with HAVING supports only equality "
-                    "correlation predicates")
-            lo = has_outer(c.left)
-            outer_ast, inner_ast = (c.left, c.right) if lo \
-                else (c.right, c.left)
-            if has_outer(inner_ast):
-                raise CompileError("unsupported EXISTS correlation")
-            corr.append((outer_ast, inner_ast))
-        if not corr:
+        inner_where, pairs = rule.comparisons(
+            "EXISTS with HAVING supports only equality correlation "
+            "predicates", "unsupported EXISTS correlation",
+            equality_only=True)
+        if not pairs:
             return None  # uncorrelated HAVING probe handled downstream
+        corr = [(oa, ia) for _, oa, ia in pairs]
         n = self._scalar_hidden = getattr(self, "_scalar_hidden", 0) + 1
         keys = [f"__xk{n}_{i}" for i in range(len(corr))]
-        inner_where = None
-        for c in inner_conjs:
-            inner_where = c if inner_where is None else ast.Binary(
-                op="and", left=inner_where, right=c)
-        import dataclasses as _dc
-
         dec = ast.Select(
             items=tuple(ast.SelectItem(expr=ia, alias=kn)
                         for (_, ia), kn in zip(corr, keys))
@@ -755,10 +722,8 @@ class QueryCompiler:
         if force_false:
             sub = sub.where(F.lit(False))
         ec = self._expr_compiler()
-        cond = None
-        for (oa, _), kn in zip(corr, keys):
-            c = ec.compile(oa) == F.col(kn)
-            cond = c if cond is None else cond & c
+        cond = _and_cols(ec.compile(oa) == F.col(kn)
+                         for (oa, _), kn in zip(corr, keys))
         return sub, cond, empty_pass
 
     def _split_correlation(self, sel: ast.Node, extra_inner: tuple = ()):
@@ -777,23 +742,8 @@ class QueryCompiler:
                 or sel.from_ is None or sel.group_by \
                 or sel.having is not None or sel.qualify is not None:
             return None
-        inner_rel = QueryCompiler(self.session, self.scope) \
-            .compile_relation(sel.from_)
-        inner_cols = {c.lower() for c in inner_rel.columns}
-        inner_aliases = _relation_aliases(sel.from_)
-
-        def is_outer(ref: ast.ColumnRef) -> bool:
-            if ref.qualifier is not None:
-                return ref.qualifier.lower() not in inner_aliases
-            return ref.name.lower() not in inner_cols
-
-        corr: List[ast.Node] = []
-        local: List[ast.Node] = []
-        from .rewrite import walk
-
-        for conj in _split_conjuncts(sel.where):
-            refs = [n for n in walk(conj) if isinstance(n, ast.ColumnRef)]
-            (corr if any(is_outer(r) for r in refs) else local).append(conj)
+        rule = Correlation(self.session, self.scope, sel)
+        local, corr = rule.split()
         if not corr:
             return None
 
@@ -802,7 +752,7 @@ class QueryCompiler:
 
         def rewrite_inner(node: ast.Node) -> ast.Node:
             def repl(n):
-                if isinstance(n, ast.ColumnRef) and not is_outer(n):
+                if isinstance(n, ast.ColumnRef) and not rule.is_outer(n):
                     name = proj.setdefault(n, f"__c{len(proj)}")
                     return ast.ColumnRef(parts=(name,), quoted=True)
                 return n
@@ -814,20 +764,12 @@ class QueryCompiler:
             extra_names.append(proj.setdefault(e, f"__c{len(proj)}"))
 
         ec = self._expr_compiler()
-        sub_df = inner_rel
+        sub_df = rule.rel
         if local:
-            cond = None
-            for c in local:
-                cc = ec.compile(c)
-                cond = cc if cond is None else (cond & cc)
-            sub_df = sub_df.filter(cond)
+            sub_df = sub_df.filter(_and_cols(ec.compile(c) for c in local))
         sub_df = sub_df.select(*[
             ec.compile(ref).alias(name) for ref, name in proj.items()])
-        corr_cond = None
-        for c in corr_rw:
-            cc = ec.compile(c)
-            corr_cond = cc if corr_cond is None else (corr_cond & cc)
-        return sub_df, corr_cond, extra_names
+        return sub_df, _and_cols(ec.compile(c) for c in corr_rw), extra_names
 
     # ------------------------------------------------------------- aggregation
 
@@ -1431,96 +1373,70 @@ class QueryCompiler:
         outer rows. Decorrelated into ONE grouped aggregate over the inner
         relation (GROUP BY the correlation keys) + a left equi join; the
         empty-set values come from evaluating the same items over WHERE
-        FALSE once at compile time (a bounded 1-row job) and coalescing."""
-        from .rewrite import walk
-
+        FALSE once at compile time (a bounded 1-row job) and coalescing.
+        Non-equality correlation (`WHERE i.x < t.x`) takes the theta plan
+        of ThetaAggregate instead."""
         sel = rel.query
-        probe = QueryCompiler(self.session, self.scope) \
-            .compile_relation(sel.from_)
-        inner_cols = {c.lower() for c in probe.columns}
-        inner_aliases = _relation_aliases(sel.from_)
-        left_cols = {c.lower() for c in left.columns}
-
-        def is_outer(ref: ast.ColumnRef) -> bool:
-            q = ref.qualifier
-            if q is not None:
-                return q.lower() not in inner_aliases
-            return (ref.name.lower() not in inner_cols
-                    and ref.name.lower() in left_cols)
-
-        def has_outer(node: ast.Node) -> bool:
-            return any(isinstance(n, ast.ColumnRef) and is_outer(n)
-                       for n in walk(node))
-
-        conjs = _split_conjuncts(sel.where) if sel.where is not None else []
-        corr: List[tuple] = []
-        theta: List[tuple] = []  # (op, outer_ast, inner_ast)
-        inner_conjs: List[ast.Node] = []
-        for c in conjs:
-            if not has_outer(c):
-                inner_conjs.append(c)
-                continue
-            if not (isinstance(c, ast.Binary)
-                    and c.op in _THETA_FLIP):
-                raise CompileError(
-                    "LATERAL aggregate correlation predicates must be "
-                    "comparisons (=, <, <=, >, >=, <>)")
-            lo = has_outer(c.left)
-            outer_ast, inner_ast = (c.left, c.right) if lo \
-                else (c.right, c.left)
-            op = c.op if lo else _THETA_FLIP[c.op]
-            if has_outer(inner_ast):
-                raise CompileError("unsupported LATERAL correlation")
-            if op == "=":
-                corr.append((outer_ast, inner_ast))
-            else:
-                theta.append((op, outer_ast, inner_ast))
-        if theta:
-            return self._lateral_aggregate_theta(
-                left, rel, how, on_cond, sel, corr, theta, inner_conjs)
-        if not corr:
-            raise CompileError(
-                "LATERAL aggregate subquery has no equality correlation")
+        rule = Correlation(self.session, self.scope, sel,
+                           {c.lower() for c in left.columns})
+        inner_where, pairs = rule.comparisons(
+            "LATERAL aggregate correlation predicates must be "
+            "comparisons (=, <, <=, >, >=, <>)",
+            "unsupported LATERAL correlation")
         n = getattr(self, "_lateral_counter", 0)
         self._lateral_counter = n + 1
-        keys = [f"__lk{n}_{i}" for i in range(len(corr))]
-        inner_where = None
-        for c in inner_conjs:
-            inner_where = c if inner_where is None else ast.Binary(
-                op="and", left=inner_where, right=c)
-        import dataclasses as _dc
-
-        dec = ast.Select(
-            items=tuple(sel.items) + tuple(
-                ast.SelectItem(expr=ia, alias=kn)
-                for (_, ia), kn in zip(corr, keys)),
-            from_=sel.from_, where=inner_where,
-            group_by=tuple(ia for _, ia in corr))
-        sub = QueryCompiler(self.session, self.scope).compile_query(dec)
-        # `=` correlation can never select the NULL-key group
-        for kn in keys:
-            sub = sub.where(F.col(kn).isNotNull())
-        # pg: the aggregate lateral yields exactly one row per outer row —
-        # aggregates over the EMPTY set for outer keys with no inner match
-        # (count -> 0, max -> NULL). Synthesize those rows by unioning the
-        # WHERE FALSE aggregate (a 1-row frame) against the outer keys that
-        # found no group, so the final join always matches and the left
-        # side's relation aliases survive untouched.
-        empty = QueryCompiler(self.session, self.scope).compile_query(
-            _dc.replace(sel, where=ast.Literal(False, "bool"),
-                        items=tuple(sel.items)))
         ec = self._expr_compiler()
-        missing = (left.select(*[ec.compile(oa).alias(kn)
-                                 for (oa, _), kn in zip(corr, keys)])
-                   .distinct()
-                   .join(sub.select(*keys), keys, "left_anti"))
-        filler = missing.crossJoin(F.broadcast(empty))
-        sub_full = sub.unionByName(filler.select(*sub.columns))
-        right = sub_full.alias(rel.alias)
-        cond = None
-        for (oa, _), kn in zip(corr, keys):
-            c = ec.compile(oa).eqNullSafe(F.col(f"{rel.alias}.{kn}"))
-            cond = c if cond is None else cond & c
+        if any(op != "=" for op, _, _ in pairs):
+            theta = ThetaAggregate(
+                self.session, self.scope, sel,
+                [(it.expr, it.alias or _auto_name(it.expr, i))
+                 for i, it in enumerate(sel.items)],
+                pairs, inner_where, "__lt", n,
+                "theta-correlated LATERAL aggregates")
+            # the left join already yields pg's empty-set aggregates for
+            # outer rows with no match: no filler union needed
+            left, agg_df = theta.attach(ec, left)
+            idr = f"{theta.idc}_r"
+            right = agg_df.withColumnRenamed(theta.idc, idr) \
+                .alias(rel.alias)
+            cond = F.col(theta.idc) == F.col(f"{rel.alias}.{idr}")
+            hidden = [theta.idc, idr]
+        else:
+            if not pairs:
+                raise CompileError(
+                    "LATERAL aggregate subquery has no equality correlation")
+            corr = [(oa, ia) for _, oa, ia in pairs]
+            hidden = [f"__lk{n}_{i}" for i in range(len(corr))]
+            dec = ast.Select(
+                items=tuple(sel.items) + tuple(
+                    ast.SelectItem(expr=ia, alias=kn)
+                    for (_, ia), kn in zip(corr, hidden)),
+                from_=sel.from_, where=inner_where,
+                group_by=tuple(ia for _, ia in corr))
+            sub = QueryCompiler(self.session, self.scope).compile_query(dec)
+            # `=` correlation can never select the NULL-key group
+            for kn in hidden:
+                sub = sub.where(F.col(kn).isNotNull())
+            # pg: the aggregate lateral yields exactly one row per outer
+            # row — aggregates over the EMPTY set for outer keys with no
+            # inner match (count -> 0, max -> NULL). Synthesize those rows
+            # by unioning the WHERE FALSE aggregate (a 1-row frame) against
+            # the outer keys that found no group, so the final join always
+            # matches and the left side's relation aliases survive
+            # untouched.
+            empty = QueryCompiler(self.session, self.scope).compile_query(
+                dataclasses.replace(sel, where=ast.Literal(False, "bool"),
+                                    items=tuple(sel.items)))
+            missing = (left.select(*[ec.compile(oa).alias(kn)
+                                     for (oa, _), kn in zip(corr, hidden)])
+                       .distinct()
+                       .join(sub.select(*hidden), hidden, "left_anti"))
+            filler = missing.crossJoin(F.broadcast(empty))
+            sub_full = sub.unionByName(filler.select(*sub.columns))
+            right = sub_full.alias(rel.alias)
+            cond = _and_cols(
+                ec.compile(oa).eqNullSafe(F.col(f"{rel.alias}.{kn}"))
+                for (oa, _), kn in zip(corr, hidden))
         trivially_true = (on_cond is None
                           or (isinstance(on_cond, ast.Literal)
                               and on_cond.value is True))
@@ -1533,117 +1449,7 @@ class QueryCompiler:
             # alias qualification intact (a post-join nulling would detach
             # the alias-qualified originals)
             cond = cond & on_compiled
-        out = left.join(right, cond, "left").drop(*keys)
-        if how != "left" and on_compiled is not None:
-            out = out.where(on_compiled.eqNullSafe(True))
-        return out
-
-    def _lateral_aggregate_theta(self, left: DataFrame, rel: ast.SubqueryRel,
-                                 how: str, on_cond, sel: ast.Select,
-                                 corr: List[tuple], theta: List[tuple],
-                                 inner_conjs: List[ast.Node]) -> DataFrame:
-        """Aggregate LATERAL with non-equality correlation, e.g.
-        `LATERAL (SELECT count(*) FROM i WHERE i.x < t.x) l`: id-tag the
-        outer rows, LEFT theta-join the pre-projected inner relation
-        (equality conjuncts stay equi-join keys so the pair space is
-        bucketed whenever possible), and aggregate per id — the left join
-        already yields pg's empty-set aggregates (count -> 0, max -> NULL)
-        for outer rows with no match, so the single-row-per-outer-row
-        contract holds without a filler union. Same plan family as
-        theta-correlated scalar subqueries
-        (expressions.ExprCompiler._decorrelate_theta), generalized to the
-        multi-item LATERAL form."""
-        from .rewrite import transform, walk
-
-        n = getattr(self, "_lateral_counter", 0)
-        self._lateral_counter = n + 1
-        marker = f"__ltm{n}"
-        hidden = [ast.SelectItem(expr=ast.Literal(1, "int"), alias=marker)]
-        counter = [0]
-
-        def rewrite_aggs(node):
-            if isinstance(node, ast.Call) and node.name.lower() in AGG_NAMES \
-                    and not isinstance(node, ast.WindowCall):
-                if getattr(node, "filter_where", None) is not None \
-                        or getattr(node, "order_within", ()):
-                    raise CompileError(
-                        "FILTER / ordered aggregates are not supported in "
-                        "theta-correlated LATERAL aggregates")
-                if node.star or (node.name.lower() == "count"
-                                 and not node.args):
-                    return ast.Call(name="count",
-                                    args=(ast.ColumnRef(parts=(marker,)),))
-                import dataclasses as _dc
-
-                new_args = []
-                for a in node.args:
-                    j = counter[0]
-                    counter[0] += 1
-                    h = f"__lta{n}_{j}"
-                    hidden.append(ast.SelectItem(expr=a, alias=h))
-                    new_args.append(ast.ColumnRef(parts=(h,)))
-                return _dc.replace(node, args=tuple(new_args))
-            return node
-
-        out_items = []
-        for i, it in enumerate(sel.items):
-            new_expr = transform(it.expr, rewrite_aggs)
-            for s in walk(new_expr):
-                if isinstance(s, ast.ColumnRef) \
-                        and not s.parts[0].startswith("__lt"):
-                    raise CompileError(
-                        "non-aggregate column references are not supported "
-                        "in theta-correlated LATERAL aggregates")
-            out_items.append((new_expr, it.alias or _auto_name(it.expr, i)))
-
-        key_specs = []  # (op, outer_ast, hidden_key_name)
-        for i, (oa, ia) in enumerate(corr):
-            kn = f"__ltk{n}_e{i}"
-            hidden.append(ast.SelectItem(expr=ia, alias=kn))
-            key_specs.append(("=", oa, kn))
-        for i, (op, oa, ia) in enumerate(theta):
-            kn = f"__ltk{n}_t{i}"
-            hidden.append(ast.SelectItem(expr=ia, alias=kn))
-            key_specs.append((op, oa, kn))
-        inner_where = None
-        for c in inner_conjs:
-            inner_where = c if inner_where is None else ast.Binary(
-                op="and", left=inner_where, right=c)
-        dec = ast.Select(items=tuple(hidden), from_=sel.from_,
-                         where=inner_where)
-        inner_df = QueryCompiler(self.session, self.scope).compile_query(dec)
-
-        _OPS = {"=": "__eq__", "<": "__lt__", "<=": "__le__",
-                ">": "__gt__", ">=": "__ge__", "<>": "__ne__",
-                "!=": "__ne__"}
-        idc = f"__ltid{n}"
-        # the id column feeds two plan branches (theta join + final join);
-        # monotonically_increasing_id is order-dependent, so pin the ids
-        # with a checkpoint barrier (same discipline as the scalar path)
-        tagged = _ckpt_tracked(
-            left.withColumn(idc, F.monotonically_increasing_id()),
-            eager=False)
-        ec = self._expr_compiler()
-        cond = None
-        for op, oa, kn in key_specs:
-            c = getattr(ec.compile(oa), _OPS[op])(F.col(kn))
-            cond = c if cond is None else cond & c
-        joined = tagged.join(inner_df, cond, "left")
-        agg_ec = ExprCompiler(self.session, agg_context=True,
-                              scope=self.scope)
-        agg_df = joined.groupBy(idc).agg(
-            *[agg_ec.compile(e).alias(nm) for e, nm in out_items])
-        idr = f"{idc}_r"
-        right = agg_df.withColumnRenamed(idc, idr).alias(rel.alias)
-        jc = F.col(idc) == F.col(f"{rel.alias}.{idr}")
-        trivially_true = (on_cond is None
-                          or (isinstance(on_cond, ast.Literal)
-                              and on_cond.value is True))
-        on_compiled = None if trivially_true else ec.compile(on_cond)
-        if how == "left" and on_compiled is not None:
-            # pg NULL-extension: failing ON leaves NULL lateral columns
-            jc = jc & on_compiled
-        out = tagged.join(right, jc, "left").drop(idc, idr)
+        out = left.join(right, cond, "left").drop(*hidden)
         if how != "left" and on_compiled is not None:
             out = out.where(on_compiled.eqNullSafe(True))
         return out
@@ -1660,8 +1466,6 @@ class QueryCompiler:
         per-outer-row subquery execution. Only equality correlations
         decorrelate this way (same restriction as scalar subqueries)."""
         from pyspark.sql import Window
-
-        from .rewrite import walk
 
         sel = rel.query
         if not isinstance(sel, ast.Select) or sel.from_ is None:
@@ -1680,57 +1484,23 @@ class QueryCompiler:
             raise CompileError(
                 "LATERAL subquery supports plain correlated SELECTs "
                 "(optionally ORDER BY ... LIMIT n)")
-        probe = QueryCompiler(self.session, self.scope) \
-            .compile_relation(sel.from_)
-        inner_cols = {c.lower() for c in probe.columns}
-        inner_aliases = _relation_aliases(sel.from_)
-        left_cols = {c.lower() for c in left.columns}
-
-        def is_outer(ref: ast.ColumnRef) -> bool:
-            q = ref.qualifier
-            if q is not None:
-                return q.lower() not in inner_aliases
-            return (ref.name.lower() not in inner_cols
-                    and ref.name.lower() in left_cols)
-
-        def has_outer(node: ast.Node) -> bool:
-            return any(isinstance(n, ast.ColumnRef) and is_outer(n)
-                       for n in walk(node))
-
-        conjs = _split_conjuncts(sel.where) if sel.where is not None else []
-        corr: List[tuple] = []
-        inner_conjs: List[ast.Node] = []
-        for c in conjs:
-            if not has_outer(c):
-                inner_conjs.append(c)
-                continue
-            if not (isinstance(c, ast.Binary) and c.op == "="):
-                raise CompileError(
-                    "LATERAL correlation predicates must be equalities — "
-                    "for nearest-match-per-row shapes use ASOF JOIN "
-                    "(single-shuffle union+window plan), or a "
-                    "theta-correlated scalar subquery for single values")
-            lo, ro = has_outer(c.left), has_outer(c.right)
-            if lo and ro:
-                raise CompileError(
-                    "LATERAL correlation references outer columns on "
-                    "both sides")
-            outer_ast, inner_ast = (c.left, c.right) if lo else (c.right, c.left)
-            if has_outer(inner_ast):
-                raise CompileError("unsupported LATERAL correlation")
-            corr.append((outer_ast, inner_ast))
-        if not corr:
+        rule = Correlation(self.session, self.scope, sel,
+                           {c.lower() for c in left.columns})
+        inner_where, pairs = rule.comparisons(
+            "LATERAL correlation predicates must be equalities — "
+            "for nearest-match-per-row shapes use ASOF JOIN "
+            "(single-shuffle union+window plan), or a "
+            "theta-correlated scalar subquery for single values",
+            "LATERAL correlation references outer columns on both sides",
+            equality_only=True)
+        if not pairs:
             raise CompileError(
                 "LATERAL subquery has no equality correlation — use a "
                 "plain subquery in FROM instead")
-
+        corr = [(oa, ia) for _, oa, ia in pairs]
         n = getattr(self, "_lateral_counter", 0)
         self._lateral_counter = n + 1
         keys = [f"__lk{n}_{i}" for i in range(len(corr))]
-        inner_where = None
-        for c in inner_conjs:
-            inner_where = c if inner_where is None else ast.Binary(
-                op="and", left=inner_where, right=c)
         # hidden projections: correlation keys + sort expressions (the
         # ORDER BY column need not be in the select list)
         sort_keys = [f"__ls{n}_{j}" for j in range(len(sel.order_by))] \
@@ -1765,10 +1535,8 @@ class QueryCompiler:
 
         right = inner_df.alias(rel.alias)
         ec = self._expr_compiler()
-        cond = None
-        for (outer_ast, _), k in zip(corr, keys):
-            eq = ec.compile(outer_ast) == F.col(f"{rel.alias}.{k}")
-            cond = eq if cond is None else cond & eq
+        cond = _and_cols(ec.compile(oa) == F.col(f"{rel.alias}.{k}")
+                         for (oa, _), k in zip(corr, keys))
         if on_cond is not None:
             cond = cond & ec.compile(on_cond)
         return left.join(right, cond, how).drop(*keys)
@@ -1967,7 +1735,8 @@ class QueryCompiler:
         """Attach scalar-subquery results: uncorrelated ones as broadcast
         cross joins, correlated ones as left equi joins against their
         decorrelated grouped aggregates (NULL for missing groups = SQL's
-        empty-subquery value).  Window helper pre-columns (GROUPS frames'
+        empty-subquery value), theta-correlated ones through their
+        ThetaAggregate and a join back on the outer row id.  Window helper pre-columns (GROUPS frames'
         staged dense_rank keys) attach first — they only reference input
         columns and must exist before the projection evaluates."""
         names = []
@@ -1981,41 +1750,16 @@ class QueryCompiler:
             names.extend(name) if isinstance(name, tuple) else names.append(name)
         ec.pending_scalar.clear()
         for val, sdf, keys in ec.pending_correlated:
-            cond = None
-            for outer_ast, key_name in keys:
-                c = ec.compile(outer_ast) == F.col(key_name)
-                cond = c if cond is None else (cond & c)
-                names.append(key_name)
+            cond = _and_cols(ec.compile(oa) == F.col(kn) for oa, kn in keys)
             df = df.join(sdf, cond, "left")
+            names.extend(kn for _, kn in keys)
             names.append(val)
         ec.pending_correlated.clear()
-        _OPS = {"=": "__eq__", "<": "__lt__", "<=": "__le__",
-                ">": "__gt__", ">=": "__ge__", "<>": "__ne__",
-                "!=": "__ne__"}
-        for val, sdf, key_specs, item_ast in ec.pending_theta:
-            # theta-correlated scalar aggregate: id-tag outer rows, theta
-            # join the pre-projected inner, aggregate per id, join back.
-            # Equality conjuncts stay equi keys (hash join); only the
-            # residual inequality pairs within each bucket.
-            # The id column feeds TWO plan branches (the theta join and the
-            # final id join); monotonically_increasing_id is recomputed per
-            # branch and row order after a shuffle is not guaranteed stable,
-            # so pin the ids with a localCheckpoint barrier first.
-            idc = f"__corr_id{val[5:]}"
-            df = _ckpt_tracked(
-                df.withColumn(idc, F.monotonically_increasing_id()),
-                eager=False)
-            cond = None
-            for op, outer_ast, key_name in key_specs:
-                c = getattr(ec.compile(outer_ast), _OPS[op])(F.col(key_name))
-                cond = c if cond is None else (cond & c)
-            joined = df.join(sdf, cond, "left")
-            agg_ec = ExprCompiler(self.session, agg_context=True,
-                                  scope=self.scope)
-            agg_df = joined.groupBy(idc).agg(
-                agg_ec.compile(item_ast).alias(val))
-            df = df.join(agg_df, idc, "left")
-            names.extend([idc, val])
+        for theta in ec.pending_theta:
+            df, agg_df = theta.attach(ec, df)
+            df = df.join(agg_df, theta.idc, "left")
+            names.append(theta.idc)
+            names.extend(nm for _, nm in theta.items)
         ec.pending_theta.clear()
         return df, names
 
@@ -2088,8 +1832,6 @@ def _relation_aliases(rel: ast.Node) -> set:
 
 
 def _contains_window(node: ast.Node) -> bool:
-    from .rewrite import walk
-
     return any(isinstance(n, ast.WindowCall) for n in walk(node))
 
 
@@ -2127,9 +1869,199 @@ def _int_literal(node: ast.Node, what: str) -> int:
 
 
 # correlation comparison flip when the outer expression sits on the right
-# (`i.x < t.x` normalizes to outer > inner)
-_THETA_FLIP = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<=",
-               "<>": "<>", "!=": "<>"}
+# (`i.x < t.x` normalizes to `t.x > i.x`), and the Column method of each
+# normalized comparison
+_FLIP = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<=",
+         "<>": "<>", "!=": "<>"}
+_OPS = {"=": "__eq__", "<": "__lt__", "<=": "__le__", ">": "__gt__",
+        ">=": "__ge__", "<>": "__ne__", "!=": "__ne__"}
+
+
+def _and_ast(conjs: List[ast.Node]) -> Optional[ast.Node]:
+    """Left-deep AND of AST conjuncts; None for none."""
+    out = None
+    for c in conjs:
+        out = c if out is None else ast.Binary(op="and", left=out, right=c)
+    return out
+
+
+def _and_cols(cols) -> Column:
+    """Left-deep AND of one or more Columns."""
+    return functools.reduce(operator.and_, cols)
+
+
+class Correlation:
+    """Which references of the subquery `sel` are outer, and its WHERE
+    split along them: the one correlation rule of scalar, EXISTS, IN and
+    LATERAL subqueries.
+
+    A qualified ref is outer when its qualifier names no relation of
+    `sel.from_`. An unqualified ref resolves inner-first (SQL scoping): it
+    is outer when it names no inner column and, for LATERAL (`left_cols`
+    given), names a column of the left input — pg allows
+    `WHERE o.k = outer_col` without qualifying outer_col. The inner
+    relation is compiled once (`rel`), just to read its column set. When
+    that fails the error propagates, unless `lenient`: then `rel` is None
+    and unqualified refs count as inner (the scalar form's rule, whose
+    full compile surfaces the error later if there is one)."""
+
+    def __init__(self, session, scope: dict, sel: ast.Select,
+                 left_cols: Optional[set] = None, lenient: bool = False):
+        self.aliases = _relation_aliases(sel.from_)
+        try:
+            self.rel = QueryCompiler(session, scope) \
+                .compile_relation(sel.from_)
+            self.cols = {c.lower() for c in self.rel.columns}
+        except Exception:
+            if not lenient:
+                raise
+            self.rel = self.cols = None
+        self.left_cols = left_cols
+        self.conjs = _split_conjuncts(sel.where) \
+            if sel.where is not None else []
+
+    def is_outer(self, ref: ast.ColumnRef) -> bool:
+        if ref.qualifier is not None:
+            return ref.qualifier.lower() not in self.aliases
+        name = ref.name.lower()
+        return (self.cols is not None and name not in self.cols
+                and (self.left_cols is None or name in self.left_cols))
+
+    def has_outer(self, node: ast.Node) -> bool:
+        return any(isinstance(n, ast.ColumnRef) and self.is_outer(n)
+                   for n in walk(node))
+
+    def split(self) -> Tuple[List[ast.Node], List[ast.Node]]:
+        """(inner-only conjuncts, correlated conjuncts) of WHERE."""
+        inner: List[ast.Node] = []
+        corr: List[ast.Node] = []
+        for c in self.conjs:
+            (corr if self.has_outer(c) else inner).append(c)
+        return inner, corr
+
+    def comparisons(self, shape_msg: str, both_msg: str,
+                    equality_only: bool = False):
+        """(inner-only WHERE or None, [(op, outer_ast, inner_ast)]): WHERE
+        with BETWEEN desugared to its two comparisons, every correlated
+        conjunct normalized to `outer op inner`. A correlated conjunct
+        that is no comparison (no equality, when `equality_only`) raises
+        `shape_msg`; one with outer refs on both sides raises
+        `both_msg`."""
+        conjs: List[ast.Node] = []
+        for c in self.conjs:
+            if isinstance(c, ast.Between) and not c.negated:
+                conjs += [ast.Binary(op=">=", left=c.expr, right=c.low),
+                          ast.Binary(op="<=", left=c.expr, right=c.high)]
+            else:
+                conjs.append(c)
+        inner: List[ast.Node] = []
+        pairs: List[tuple] = []
+        for c in conjs:
+            if not self.has_outer(c):
+                inner.append(c)
+                continue
+            if not (isinstance(c, ast.Binary) and c.op in _FLIP) \
+                    or (equality_only and c.op != "="):
+                raise CompileError(shape_msg)
+            lo, ro = self.has_outer(c.left), self.has_outer(c.right)
+            if lo and ro:
+                raise CompileError(both_msg)
+            pairs.append((c.op, c.left, c.right) if lo
+                         else (_FLIP[c.op], c.right, c.left))
+        return _and_ast(inner), pairs
+
+
+class ThetaAggregate:
+    """Aggregates correlated by comparisons that are not all equalities
+    (the running-rank / below-threshold shape), for the scalar form (one
+    item) and the LATERAL form (several):
+
+        (SELECT count(*) FROM inner i WHERE i.x < outer.x)
+
+    Planned as: tag each outer row with an id, LEFT theta-join the inner
+    relation (its aggregate arguments pre-projected as hidden columns),
+    aggregate per outer id. The theta join is a real pairwise join (Spark
+    picks broadcast nested-loop when one side is small) — the cost pg pays
+    per row, paid once as a join; equality conjuncts stay equi-join keys
+    so the pair space is bucketed whenever possible. The left join already
+    yields pg's empty-set aggregates (count -> 0, max -> NULL) for outer
+    rows with no match. Built in two steps because the scalar form meets
+    its outer relation only when the relation compiler attaches it: the
+    constructor projects the inner side, attach() joins the outer rows.
+
+    `items` are (aggregate expression, output name) pairs, `pairs` and
+    `inner_where` come from Correlation.comparisons, and every hidden
+    column is named `{prefix}<kind>{n}...`."""
+
+    def __init__(self, session, scope: dict, sel: ast.Select,
+                 items: List[Tuple[ast.Node, str]], pairs: List[tuple],
+                 inner_where: Optional[ast.Node], prefix: str, n: int,
+                 what: str):
+        self.session, self.scope = session, scope
+        marker = f"{prefix}m{n}"
+        hidden = [ast.SelectItem(expr=ast.Literal(1, "int"), alias=marker)]
+        n_args = [0]
+
+        def rewrite_aggs(node):
+            if isinstance(node, ast.Call) and node.name.lower() in AGG_NAMES \
+                    and not isinstance(node, ast.WindowCall):
+                if node.filter_where is not None or node.order_within:
+                    raise CompileError(
+                        f"FILTER / ordered aggregates are not supported in "
+                        f"{what}")
+                if node.star or (node.name.lower() == "count"
+                                 and not node.args):
+                    return ast.Call(name="count",
+                                    args=(ast.ColumnRef(parts=(marker,)),))
+                args = []
+                for a in node.args:
+                    h = f"{prefix}a{n}_{n_args[0]}"
+                    n_args[0] += 1
+                    hidden.append(ast.SelectItem(expr=a, alias=h))
+                    args.append(ast.ColumnRef(parts=(h,)))
+                return dataclasses.replace(node, args=tuple(args))
+            return node
+
+        self.items = []
+        for expr, name in items:
+            expr = transform(expr, rewrite_aggs)
+            if any(isinstance(s, ast.ColumnRef)
+                   and not s.parts[0].startswith(prefix)
+                   for s in walk(expr)):
+                raise CompileError(
+                    f"non-aggregate column references are not supported "
+                    f"in {what}")
+            self.items.append((expr, name))
+        # equality keys first: they become the join's equi keys
+        self.keys = []  # (op, outer_ast, hidden key name)
+        for tag, group in (("e", [p for p in pairs if p[0] == "="]),
+                           ("t", [p for p in pairs if p[0] != "="])):
+            for i, (op, oa, ia) in enumerate(group):
+                kn = f"{prefix}k{n}_{tag}{i}"
+                hidden.append(ast.SelectItem(expr=ia, alias=kn))
+                self.keys.append((op, oa, kn))
+        self.inner = QueryCompiler(session, scope).compile_query(
+            ast.Select(items=tuple(hidden), from_=sel.from_,
+                       where=inner_where))
+        self.idc = f"{prefix}id{n}"
+
+    def attach(self, ec: ExprCompiler, df: DataFrame):
+        """(`df` id-tagged, its per-id aggregates); `ec` compiles the
+        outer side of the correlation against `df`."""
+        # the id column feeds two plan branches (the theta join and the
+        # join back); monotonically_increasing_id is recomputed per branch
+        # and row order after a shuffle is not stable, so pin the ids with
+        # a localCheckpoint barrier first
+        tagged = _ckpt_tracked(
+            df.withColumn(self.idc, F.monotonically_increasing_id()),
+            eager=False)
+        cond = _and_cols(getattr(ec.compile(oa), _OPS[op])(F.col(kn))
+                         for op, oa, kn in self.keys)
+        agg_ec = ExprCompiler(self.session, agg_context=True,
+                              scope=self.scope)
+        agg = tagged.join(self.inner, cond, "left").groupBy(self.idc).agg(
+            *[agg_ec.compile(e).alias(nm) for e, nm in self.items])
+        return tagged, agg
 
 
 def _auto_name(expr: ast.Node, i: int) -> str:

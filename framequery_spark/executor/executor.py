@@ -199,6 +199,11 @@ class Executor:
                     T.StructField("nspacl", T.StringType()),
                 ]),
             )
+        # Names resolved outside the scope (durable root, Spark catalog) can
+        # be rebound between calls while the scope stays the same, so a
+        # compile that reads one must never be plan-cached.
+        from ..operators.cache import note_compile_materialization
+
         # durable catalog: a prior session's CTAS result re-resolves from
         # <table_root>/<name>.parquet (cached in scope so one session
         # reads one snapshot — pg-repeatable within the session)
@@ -209,9 +214,12 @@ class Executor:
             if os.path.isdir(dpath) or os.path.isfile(dpath):
                 df = self.spark.read.parquet(dpath)
                 scope[name] = df
+                note_compile_materialization()
                 return df
         try:
-            return self.spark.table(name)
+            df = self.spark.table(name)
+            note_compile_materialization()
+            return df
         except Exception:
             from ..compiler.expressions import CompileError
 
@@ -1052,12 +1060,15 @@ def _capture_caller_scope(spark: SparkSession, depth: int = 2) -> dict:
 #   - the SQL mentions no volatile/time/sequence function (conservative
 #     textual screen; false positives only cost a cache miss),
 #   - compiling registered nothing: operators.cache.REGISTRATIONS did not
-#     move, so no tracked resource and no compile-time materialization
+#     move, so no tracked resource, no compile-time materialization and
+#     no name resolved outside the scope
 #     (recursive CTEs and correlated-theta decorrelation materialize
 #     during compile; rebuilding from their analyzed plan would reference
 #     released checkpoint blocks — or, for the driver-local recursive
 #     frontier path, replay frozen LocalRelation rows instead of
-#     recomputing),
+#     recomputing; a table read from the durable root or the Spark
+#     catalog can be rebound behind an unchanged scope, which the key —
+#     scope ids only — cannot see),
 #   - scope values are all Spark DataFrames (identity-keyed).
 _PLAN_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
 _PLAN_CACHE_MAX = 256
@@ -1133,10 +1144,7 @@ def execute(q: str, scope: Optional[dict] = None,
     from ..operators import cache as _opcache
 
     n_reg = _opcache.REGISTRATIONS
-    try:
-        node = parse(q)
-    except Exception:
-        return Executor(scope=scope, spark=spark, basepath=basepath).execute(q)
+    node = parse(q)
     ex = Executor(scope=scope, spark=spark, basepath=basepath)
     out = ex._execute_statement(node, ex.scope)
     if (key is not None and isinstance(out, DataFrame)

@@ -26,9 +26,10 @@ Each entry belongs to one of two release classes:
   materialized everything (bench reps, tests, teardown) release both.
 
 ``REGISTRATIONS`` counts every registration, monotonically, plus the
-compile-time materializations that hold nothing
-(:func:`note_compile_materialization`). The executor's plan cache stores a
-compiled plan only when the count did not move during the compile.
+compile-time events that hold nothing but still make a compiled plan
+unsafe to reuse (:func:`note_compile_materialization`). The executor's
+plan cache stores a compiled plan only when the count did not move during
+the compile.
 """
 from __future__ import annotations
 
@@ -59,11 +60,13 @@ def _register(handle, release: Callable[[bool], object],
 
 
 def note_compile_materialization() -> None:
-    """Count a compile-time materialization that holds nothing (the
-    recursive-CTE driver-local frontier collects rows into a
-    LocalRelation): a plan that embeds materialized rows must never be
-    plan-cached — rebuilding it would replay frozen data instead of
-    recomputing from the sources."""
+    """Count a compile-time event that holds nothing but makes the compiled
+    plan unsafe to reuse, so it is never plan-cached: a materialization
+    (the recursive-CTE driver-local frontier collects rows into a
+    LocalRelation — rebuilding the plan would replay frozen data instead
+    of recomputing from the sources), or a table resolved outside the
+    scope (the durable root or the Spark catalog — the name can be rebound
+    while the scope, which keys the cache, stays the same)."""
     global REGISTRATIONS
     REGISTRATIONS += 1
 

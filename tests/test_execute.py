@@ -183,6 +183,17 @@ def test_correlated_subquery_unqualified_outer_ref(spark, scope):
     assert out == [(1, 5), (2, 5), (3, 5), (4, 5)]
 
 
+def test_correlated_subquery_schema_qualified_inner_ref(spark):
+    # `s.u.k` names the inner table through its schema: the qualifier
+    # (`u`), not the schema, decides that the ref is inner
+    scope = {"t": spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3]})),
+             "s.u": spark.createDataFrame(pd.DataFrame({
+                 "k": [1, 1, 2], "y": [10, 20, 30]}))}
+    q = ("select k, (select sum(y) from s.u where s.u.k = t.k) as s "
+         "from t order by k")
+    assert rows(run(q, scope, spark)) == [(1, 30), (2, 30), (3, None)]
+
+
 def test_correlated_sum_subquery_empty_group_stays_null(spark, scope):
     q = ("select a, (select sum(o.a) from other o where o.a = test.a) as s "
          "from test order by a")
@@ -696,6 +707,29 @@ def test_plan_cache_invalidates_on_dead_scope_df(spark, scope):
                  for r in fq.execute(q, impostor, spark=spark).collect()]
         assert rows3 != rows1 or not rows1
     finally:
+        ex_mod._PLAN_CACHE.clear()
+        ex_mod._PLAN_CACHE.update(before)
+
+
+def test_plan_cache_skips_names_resolved_outside_scope(spark):
+    """A table that resolves through the Spark catalog, not the scope, can
+    be rebound between two calls with the same scope: the second call must
+    see the new rows, so such a compile is never plan-cached."""
+    import framequery_spark as fq
+    from framequery_spark.executor import executor as ex_mod
+
+    q = "select a from fq_pc_rebound_view order by a"
+    before = dict(ex_mod._PLAN_CACHE)
+    try:
+        spark.createDataFrame(pd.DataFrame({"a": [1, 2]})) \
+            .createOrReplaceTempView("fq_pc_rebound_view")
+        assert rows(fq.execute(q, {}, spark=spark)) == [(1,), (2,)]
+        spark.createDataFrame(pd.DataFrame({"a": [7]})) \
+            .createOrReplaceTempView("fq_pc_rebound_view")
+        assert rows(fq.execute(q, {}, spark=spark)) == [(7,)]
+        assert all(k[0] != q for k in ex_mod._PLAN_CACHE)
+    finally:
+        spark.catalog.dropTempView("fq_pc_rebound_view")
         ex_mod._PLAN_CACHE.clear()
         ex_mod._PLAN_CACHE.update(before)
 

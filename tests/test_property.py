@@ -260,14 +260,21 @@ def test_generate_series_matches_python_range(spark, start, stop, step):
 @given(threshold=st.integers(min_value=-2, max_value=6))
 def test_theta_correlated_count_matches_duckdb(spark, scope, duck,
                                                threshold):
-    """Theta-correlated scalar count matches DuckDB's native decorrelation
-    for arbitrary thresholds (incl. no-match and all-match extremes)."""
-    q = (f"select a, (select count(*) from t u "
-         f"where u.b < t.b + {threshold}) c from t")
-    ours = sorted(tuple(r) for r in
-                  fq.execute(q, scope, spark=spark).collect())
-    theirs = sorted(tuple(r) for r in duck.execute(q).fetchall())
-    assert ours == theirs
+    """Theta-correlated count matches DuckDB's native decorrelation for
+    arbitrary thresholds (incl. no-match and all-match extremes), as a
+    scalar subquery and as a LATERAL aggregate, for a plain comparison and
+    for a BETWEEN range. The oracle is DuckDB's scalar form: DuckDB drops
+    the LATERAL-aggregate rows of empty groups."""
+    for corr in (f"u.b < t.b + {threshold}",
+                 f"u.b between t.b - 1 and t.b + {threshold}"):
+        scalar = f"select a, (select count(*) from t u where {corr}) c from t"
+        lateral = (f"select a, l.c from t, lateral (select count(*) as c "
+                   f"from t u where {corr}) l")
+        theirs = sorted(tuple(r) for r in duck.execute(scalar).fetchall())
+        for q in (scalar, lateral):
+            ours = sorted(tuple(r) for r in
+                          fq.execute(q, scope, spark=spark).collect())
+            assert ours == theirs, q
 
 
 # -------------------------------------------------- FTS properties (r08)

@@ -3,15 +3,18 @@
 Usage:
     python tools/capture_plans.py <suffix> [entry ...]
 
-Writes plans/r12/<entry>_<suffix>.txt for each named entry (default: a
-built-in list of the bench's most expensive entries). The suffix is
-"before" / "after" per the optimization-round deliverable contract.
+Writes plans/$SPARK_GRAFT_PLANS_ROUND/<entry>_<suffix>.txt (round default
+r13) for each named entry (default: a built-in list of the bench's most
+expensive entries). The suffix is "before" / "after". Expression ids
+(`#<id>`) and exchange `plan_id=<id>` numbers are stripped before writing,
+so a before/after pair diffs empty when only ids moved.
 
 Streaming entries are skipped (a streaming DataFrame's plan is only
 meaningful per micro-batch); their batch twins share the physical shape.
 """
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -28,6 +31,11 @@ DEFAULT_ENTRIES = [
     "op_winnow_pairs", "op_dsir_select", "q01_pricing_summary",
     "op_textrank", "op_bigram_nll",
 ]
+
+
+def _strip_ids(txt: str) -> str:
+    """Drop the per-session id counters an explain string carries."""
+    return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", txt))
 
 
 def main():
@@ -60,7 +68,7 @@ def main():
             continue
         try:
             df = qs[name](spark, SF_DIR)
-            txt = df._jdf.queryExecution().explainString(mode)
+            txt = _strip_ids(df._jdf.queryExecution().explainString(mode))
         except Exception as exc:
             print(f"{name}: FAILED: {exc}", file=sys.stderr)
             continue
