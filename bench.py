@@ -202,15 +202,19 @@ def main() -> None:
     all_runs: dict[str, list] = {}
     rep_diag: dict[str, list] = {}  # per-rep [released, persistent-after]
     rep_phase: dict[str, list] = {}  # per-rep [build_s, exec_s]
+    rep_compiles: dict[str, list] = {}  # per-rep Janino compiles
     total = 0.0
     from framequery_spark.operators.cache import release_cached
+    from framequery_spark.plans.tuning import codegen_compiles
 
     def _rep(name, fn, runs: list) -> int:
         """One timed rep: build the frame (Python/py4j plus any driver-side
         materialization the operator does), collect it, then release.
-        Appends the total to `runs` and records the build/exec split and
-        the cache diagnostic. Raises whatever the entry raises; returns
-        the row count."""
+        Appends the total to `runs` and records the build/exec split, the
+        Janino compile count (non-zero when warm: the entry's generated
+        code is not resident) and the cache diagnostic. Raises whatever
+        the entry raises; returns the row count."""
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
@@ -219,6 +223,7 @@ def main() -> None:
         runs.append(t2 - t0)
         rep_phase.setdefault(name, []).append(
             [round(t1 - t0, 3), round(t2 - t1, 3)])
+        rep_compiles.setdefault(name, []).append(codegen_compiles(spark) - c0)
         # reps stay independent: drop persisted intermediates the
         # operators leave behind. BLOCKING release — the r09 full
         # bench showed op_jaccard_pairs reps rising monotonically
@@ -358,6 +363,7 @@ def main() -> None:
                 "entries": {k: {"median": v,
                                 "reps": all_runs.get(k, []),
                                 "build_exec": rep_phase.get(k, []),
+                                "compiles": rep_compiles.get(k, []),
                                 "cache_diag": rep_diag.get(k, [])}
                             for k, v in timings.items()},
             }, fh, indent=1, sort_keys=True)

@@ -1002,6 +1002,11 @@ class QueryCompiler:
                 # probe branch re-runs the whole aggregation — strictly
                 # worse), and persisting df_pre materializes the full
                 # pre-agg input for a 1-row question. The probe stays.
+                # Its LocalLimit/GlobalLimit stages recompile on every
+                # execution, even plan-cached: Spark names each limit's
+                # counter from a JVM-global AtomicInteger
+                # (`_limit_counter_N`), so the generated source, which is
+                # the codegen cache key, never repeats (4 classes per call).
                 probe = df_pre.select(F.lit(1).alias("__probe")).limit(1)
                 gate = (self.session.spark.range(1)
                         .select(F.lit(1).alias("__gate1"))

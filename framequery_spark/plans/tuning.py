@@ -1,8 +1,10 @@
 """Session tuning for scale.
 
-One place for the runtime confs the engine relies on. `configure_session`
-applies them idempotently; callers pass the target parallelism (executor
-cores × executors on a cluster; local CPU count on local[N]).
+One place for the confs the engine relies on. `configure_session`
+applies them idempotently, except the codegen class-cache size, which only
+a call before the JVM's first codegen can set; callers pass the target
+parallelism (executor cores × executors on a cluster; local CPU count on
+local[N]).
 `local_session` is the one local[N] session factory for bench.py and the
 scripts under tools/: it sets only the static confs, then applies
 `configure_session`.
@@ -17,17 +19,45 @@ The 100 TB rationale per conf:
   - autoBroadcastJoinThreshold 64 MB: TPC-H-style dims (region/nation/
     supplier/part at most SFs) broadcast instead of shuffling the fact table.
   - arrow enabled: all pandas_udf / mapInPandas boundaries batch via Arrow.
+  - codegen.cache.maxEntries 2000: whole-stage codegen compiles each
+    generated class through Janino into one JVM-wide LRU, 100 entries by
+    default. A mixed session cycles through more classes than that, so
+    every access misses and warm, plan-cached statements compile (and
+    HotSpot re-JITs) their classes again on every lap. The conf is static
+    and Spark reads it once, when `CodeGenerator` builds the cache at the
+    JVM's first codegen; setting it later reads back the new value but
+    changes nothing. Verify it by compile counts (`codegen_compiles`), not
+    by reading the conf back.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 from typing import Optional
 
 from pyspark.sql import SparkSession
 
+# Janino class-cache capacity, well above a mixed session's working set:
+# one lap of 11 plan-cached TPC-H-style reads generates ~200 classes.
+CODEGEN_CACHE_ENTRIES = 2000
+_CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far (Spark's CodegenMetrics)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
 
 def configure_session(spark: SparkSession, parallelism: int = None) -> SparkSession:
+    """Apply the engine's confs to `spark` (see the module docstring).
+
+    The codegen class-cache size is static: it is set through the session
+    SQLConf (`spark.conf.set` refuses static confs) and takes effect only
+    when this runs before the JVM's first codegen. A later call leaves it
+    alone and warns, because the cache is already built; check residency by
+    compile counts (`codegen_compiles`), not by reading the conf back."""
     cores = parallelism or spark.sparkContext.defaultParallelism
     conf = {
         "spark.sql.adaptive.enabled": "true",
@@ -65,6 +95,15 @@ def configure_session(spark: SparkSession, parallelism: int = None) -> SparkSess
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on a running session — keep going
+    if codegen_compiles(spark) == 0:
+        spark._jsparkSession.sessionState().conf().setConfString(
+            _CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+    else:
+        warnings.warn(
+            f"configure_session: {_CODEGEN_CACHE_CONF} not set — this JVM "
+            "already compiled generated code, so its class cache is sized; "
+            "call configure_session before the first query or pass the conf "
+            "to the session builder", RuntimeWarning, stacklevel=2)
     return spark
 
 

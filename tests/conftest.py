@@ -14,6 +14,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def spark():
     from pyspark.sql import SparkSession
 
+    from framequery_spark.plans.tuning import CODEGEN_CACHE_ENTRIES
+
     session = (
         SparkSession.builder
         .master("local[4]")
@@ -25,6 +27,10 @@ def spark():
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.warehouse.dir", "/tmp/fq_test_warehouse")
+        # static: the JVM-wide Janino class cache is sized at the first
+        # codegen, so it must be set here, not by configure_session
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     session.sparkContext.setLogLevel("ERROR")

@@ -38,3 +38,17 @@ def test_script_imports_resolve(script):
                     and not (hasattr(mod, "__path__") and importlib.util.find_spec(
                         f"{node.module}.{a.name}"))]
     assert not missing, f"{script} imports names that no longer exist: {missing}"
+
+
+def test_capture_plans_strips_session_ids():
+    spec = importlib.util.spec_from_file_location(
+        "_capture_plans", os.path.join(HERE, "tools", "capture_plans.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    one = ("Scan ExistingRDD [k#12L, v#13] MapPartitionsRDD[36] at "
+           "localCheckpoint\nExchange hashpartitioning(k#12L, 8), "
+           "ENSURE_REQUIREMENTS, [plan_id=101]")
+    two = one.replace("#12", "#40").replace("#13", "#41").replace(
+        "[36]", "[52]").replace("=101", "=217")
+    assert mod._strip_ids(one) == mod._strip_ids(two)
+    assert "[36]" not in mod._strip_ids(one)

@@ -6,8 +6,10 @@ Usage:
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<entry>_<suffix>.txt (round default
 r13) for each named entry (default: a built-in list of the bench's most
 expensive entries). The suffix is "before" / "after". Expression ids
-(`#<id>`) and exchange `plan_id=<id>` numbers are stripped before writing,
-so a before/after pair diffs empty when only ids moved.
+(`#<id>`), exchange `plan_id=<id>` numbers and RDD ids (`RDD[<id>]`, e.g.
+a checkpoint scan's `MapPartitionsRDD[36] at localCheckpoint`) are
+stripped before writing, so a before/after pair diffs empty when only ids
+moved.
 
 Streaming entries are skipped (a streaming DataFrame's plan is only
 meaningful per micro-batch); their batch twins share the physical shape.
@@ -35,6 +37,7 @@ DEFAULT_ENTRIES = [
 
 def _strip_ids(txt: str) -> str:
     """Drop the per-session id counters an explain string carries."""
+    txt = re.sub(r"RDD\[\d+\]", "RDD[]", txt)
     return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", txt))
 
 
