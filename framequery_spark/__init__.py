@@ -6,11 +6,12 @@ LLM-data-pipeline operators (dedup, similarity search, text analysis,
 multimodal plumbing) designed for 100 TB scale.
 """
 
-from .executor.executor import Executor, execute
+from .executor.executor import Executor, execute, plan_cache_info
 from .parser import parse
 
 __version__ = "0.1.0"
-__all__ = ["execute", "Executor", "parse", "compute", "__version__"]
+__all__ = ["execute", "Executor", "parse", "compute", "plan_cache_info",
+           "__version__"]
 
 
 def compute(result):

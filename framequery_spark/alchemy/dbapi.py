@@ -160,7 +160,9 @@ class Connection:
         pass
 
     def close(self) -> None:
-        pass
+        """Release what the session holds: its plan cache and the
+        checkpoints its written tables were materialized to."""
+        self._executor.close()
 
     # convenience introspection (reference get_table_names,
     # src/framequery/alchemy/dialect.py:57-60)

@@ -1093,6 +1093,11 @@ class ExprCompiler:
                 pass
         if not self.scope:
             return None
+        reads = getattr(self.executor, "_reads", None)
+        if reads is not None:
+            # the walk below reads every table's dtypes: a cached plan of
+            # this compile stays valid only while those stay the same
+            reads.schema_read = True
         found = set()
         try:
             for tname, df in self.scope.items():

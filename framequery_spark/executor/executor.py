@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import inspect
 import re
+import threading
 import weakref
 from collections import OrderedDict
 from typing import Callable, Dict, Optional
@@ -26,6 +27,7 @@ from pyspark.sql import types as T
 
 from ..compiler.expressions import CompileError
 from ..compiler.select import QueryCompiler
+from ..operators import cache as _opcache
 from ..parser import ast, parse
 from ..sources.local_relation import local_relation
 
@@ -100,7 +102,9 @@ _SHOW_OPTIONS = {
 
 
 class Executor:
-    """A persistent query session over a mutable table scope."""
+    """A persistent query session over a mutable table scope. It reuses
+    the plans of repeated queries and materializes written tables on
+    their next read; close() releases what it holds."""
 
     def __init__(self, scope: Optional[dict] = None,
                  spark: Optional[SparkSession] = None, basepath: str = ".",
@@ -131,6 +135,15 @@ class Executor:
         # WITH RECURSIVE fixpoint cap (pg has none and can loop forever; we
         # fail fast instead — raise it for deep hierarchies)
         self.recursive_max_iterations = 100
+        # plan reuse: this session's own plan cache (see _run_cached)
+        self._plans = _PlanCache()
+        self._reads: Optional[_ReadSet] = None  # set while a query compiles
+        # bounded lineage: tables a DML statement rebound since their last
+        # materialization (name -> weakref to that binding), and the
+        # registry token the materializing checkpoints are owned by
+        self._written: Dict[str, weakref.ref] = {}
+        self._owner = object()
+        self._forget = None  # finalizer, made with the first checkpoint
         if scope:
             self.update(**scope)
 
@@ -177,12 +190,17 @@ class Executor:
         return os.path.join(root, *parts[:-1], parts[-1] + ".parquet")
 
     def resolve_table(self, scope: dict, name: str) -> DataFrame:
+        reads = self._reads
         if name in scope:
             df = scope[name]
             if not isinstance(df, DataFrame):
                 df = self._ensure_df(df)
                 scope[name] = df
+            if reads is not None and self.scope.get(name) is df:
+                reads.tables[name] = weakref.ref(df)
             return df
+        if reads is not None:
+            reads.tables[name] = None  # binding it later must miss
         # pg_catalog-prefixed lookups resolve to the bare name
         if name.startswith("pg_catalog."):
             return self.resolve_table(scope, name.split(".", 1)[1])
@@ -202,8 +220,6 @@ class Executor:
         # Names resolved outside the scope (durable root, Spark catalog) can
         # be rebound between calls while the scope stays the same, so a
         # compile that reads one must never be plan-cached.
-        from ..operators.cache import note_compile_materialization
-
         # durable catalog: a prior session's CTAS result re-resolves from
         # <table_root>/<name>.parquet (cached in scope so one session
         # reads one snapshot — pg-repeatable within the session)
@@ -214,11 +230,11 @@ class Executor:
             if os.path.isdir(dpath) or os.path.isfile(dpath):
                 df = self.spark.read.parquet(dpath)
                 scope[name] = df
-                note_compile_materialization()
+                _opcache.note_compile_materialization()
                 return df
         try:
             df = self.spark.table(name)
-            note_compile_materialization()
+            _opcache.note_compile_materialization()
             return df
         except Exception:
             from ..compiler.expressions import CompileError
@@ -265,9 +281,61 @@ class Executor:
         if basepath is not None:
             self.basepath = basepath
         try:
-            return self._execute_statement(parse(q), self.scope)
+            return self._execute_sql(q)
         finally:
             self.basepath = old
+
+    def _execute_sql(self, q: str):
+        return _run_cached(self._plans, lambda: self._plan_key(q), q,
+                           self.scope, self.spark, lambda: self)
+
+    def _plan_key(self, q: str) -> tuple:
+        """This session's plan-cache key for ``q``: the text plus every
+        piece of session state a compile reads besides the scope tables
+        (whose validity the entry's read set checks)."""
+        return (q, self.basepath, self.table_root,
+                self.recursive_max_iterations,
+                tuple(sorted(self._options.items())),
+                _by_identity(self.user_functions),
+                _by_identity(self.table_functions),
+                _by_identity(self.lateral_functions))
+
+    def _materialize_written(self, node) -> None:
+        """Bounded lineage: rebind each table this query names that a DML
+        statement rebound since its last materialization to a local
+        checkpoint of its current plan, so reads replay the writes since
+        the last read, not every write of the session. Writes stay lazy;
+        the checkpoint is owned by this session, so only close() releases
+        it, and the ContextCleaner frees the superseded ones."""
+        if not self._written:
+            return
+        from ..compiler.rewrite import walk
+
+        for ref in walk(node, into_subqueries=True):
+            if not (isinstance(ref, ast.TableRef)
+                    and ref.name in self._written):
+                continue
+            name = ref.name
+            df = self.scope.get(name)
+            if df is not None and self._written[name]() is df:
+                self.scope[name] = _opcache.local_checkpoint_tracked(
+                    df, eager=True, owner=self._owner)
+                if self._forget is None:
+                    self._forget = weakref.finalize(
+                        self, _opcache.forget_owned, self._owner)
+            del self._written[name]
+
+    def plan_cache_info(self) -> dict:
+        """Hits, misses, evictions and entries of this session's plan
+        cache."""
+        return self._plans.info()
+
+    def close(self) -> None:
+        """Drop this session's plan cache and release the checkpoints its
+        written tables were materialized to; those tables must not be read
+        afterwards."""
+        self._plans.clear()
+        _opcache.release_owned(self._owner)
 
     def _exec_dml_join(self, node, scope: dict, kind: str):
         """pg `UPDATE t SET ... FROM rels WHERE cond` and
@@ -606,7 +674,15 @@ class Executor:
         return QueryCompiler(self, scope).compile_query(node)
 
     def _execute_statement(self, node, scope: dict):
-        if isinstance(node, (ast.Select, ast.SetOp, ast.Pivot, ast.Unpivot)):
+        out = self._dispatch(node, scope)
+        if isinstance(node, _DML) and scope is self.scope:
+            name = node.target if isinstance(node, ast.Merge) else node.table
+            if isinstance(scope.get(name), DataFrame):
+                self._written[name] = weakref.ref(scope[name])
+        return out
+
+    def _dispatch(self, node, scope: dict):
+        if isinstance(node, _QUERY):
             return self._compile_query(node, scope)
         if isinstance(node, ast.Explain):
             df = self._compile_query(node.query, scope)
@@ -791,9 +867,9 @@ class Executor:
                     out.append(vals[idx - 1])
                     last = t.pos + len(t.value)
             out.append(text[last:])
-            from ..parser.parser import parse as _parse
-
-            return self._execute_statement(_parse("".join(out)), scope)
+            # the spliced text is the plan-cache key: a repeat with the
+            # same arguments reuses its plan
+            return self._execute_sql("".join(out))
         if isinstance(node, ast.Deallocate):
             if node.name is None:
                 self._prepared.clear()
@@ -1042,17 +1118,18 @@ def _capture_caller_scope(spark: SparkSession, depth: int = 2) -> dict:
 
 
 # ---------------------------------------------------------------- plan cache
-# Statement-level logical-plan cache for one-shot execute() (prepared-
-# statement semantics). Re-running the same pure SELECT against the same
-# scope DataFrames skips the parse + compile (the py4j expression-building
-# round trips dominate build time: r12 measured 0.1-1.5 s per statement,
-# ~14k socket round trips for 9 builds). The cache stores the ANALYZED
-# LOGICAL PLAN only — every hit builds a brand-new Dataset via
-# Dataset.ofRows, which gets a fresh QueryExecution, so EXECUTION always
-# recomputes from the source parquet: no shuffle-stage or result reuse
-# (returning the cached DataFrame object itself would let AQE reuse its
-# materialized shuffle stages — that would be result caching, which this
-# engine refuses to do).
+# Statement-level logical-plan cache (prepared-statement semantics), one
+# implementation with two owners: the module's `_PLAN_CACHE` serves
+# scope-based execute(), and each Executor (so each DBAPI connection) owns
+# one. Re-running the same pure query skips the parse + compile (the py4j
+# expression-building round trips dominate build time: r12 measured
+# 0.1-1.5 s per statement, ~14k socket round trips for 9 builds). The
+# cache stores the ANALYZED LOGICAL PLAN only — every hit builds a
+# brand-new Dataset via Dataset.ofRows, which gets a fresh QueryExecution,
+# so EXECUTION always recomputes from the sources: no shuffle-stage or
+# result reuse (returning the cached DataFrame object itself would let AQE
+# reuse its materialized shuffle stages — that would be result caching,
+# which this engine refuses to do).
 #
 # Cached only when ALL of:
 #   - the statement parses to a pure query (Select/SetOp/Pivot/Unpivot —
@@ -1067,9 +1144,12 @@ def _capture_caller_scope(spark: SparkSession, depth: int = 2) -> dict:
 #     released checkpoint blocks — or, for the driver-local recursive
 #     frontier path, replay frozen LocalRelation rows instead of
 #     recomputing; a table read from the durable root or the Spark
-#     catalog can be rebound behind an unchanged scope, which the key —
-#     scope ids only — cannot see),
-#   - scope values are all Spark DataFrames (identity-keyed).
+#     catalog can be rebound behind an unchanged scope, which the read
+#     set cannot see),
+#   - scope values are all Spark DataFrames (identity-checked),
+#   - the compile left the owner's key unchanged (set_config() writes a
+#     session option at compile time; a hit would skip that write).
+# A hit is honoured while the entry's read set (_ReadSet) still holds.
 _PLAN_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
 _PLAN_CACHE_MAX = 256
 _VOLATILE_RE = re.compile(
@@ -1077,6 +1157,8 @@ _VOLATILE_RE = re.compile(
     r"|transaction_timestamp|timeofday|current_timestamp|current_date"
     r"|current_time|localtime|localtimestamp|uuid|gen_random_uuid"
     r"|uuid_generate_v4|nextval|currval|setval|pg_sleep)\b", re.I)
+_QUERY = (ast.Select, ast.SetOp, ast.Pivot, ast.Unpivot)
+_DML = (ast.InsertInto, ast.Update, ast.Delete, ast.Merge)
 
 
 def _plan_cache_key(q: str, scope: dict, spark: SparkSession,
@@ -1088,27 +1170,166 @@ def _plan_cache_key(q: str, scope: dict, spark: SparkSession,
     return (q, basepath, id(spark), sig)
 
 
-def _scope_refs(scope: dict) -> Optional[list]:
-    """weakrefs to the scope DataFrames, in the key's sort order. The
-    id()-based key alone is unsound: if a caller's scope DataFrame is
-    garbage-collected and CPython reuses its id for a DIFFERENT DataFrame
-    under the same SQL/basepath/session, the key would match and a stale
-    analyzed plan (bound to the dead DataFrame's relations) would be
-    returned silently. A hit is therefore only honored while every
-    original object is still alive (its weakref resolves to the very
-    object whose id is in the key); a dead ref invalidates the entry."""
-    try:
-        return [weakref.ref(v) for _, v in sorted(scope.items())]
-    except Exception:  # un-weakref-able scope value — don't cache
+class _Same:
+    """Key part compared by identity. It holds its object, so the id it
+    hashes by cannot be recycled while a key holds it."""
+
+    __slots__ = ("obj",)
+
+    def __init__(self, obj):
+        self.obj = obj
+
+    def __hash__(self):
+        return id(self.obj)
+
+    def __eq__(self, other):
+        return isinstance(other, _Same) and other.obj is self.obj
+
+
+def _by_identity(registry: dict) -> tuple:
+    return tuple(sorted((k, _Same(v)) for k, v in registry.items()))
+
+
+class _ReadSet:
+    """What one query compile read from its root scope, which is what its
+    cached plan stays valid under:
+
+    - ``tables``: each name it resolved from the scope, held by weakref
+      (the binding must still be that very object: a recycled id() can
+      never pass for a dead original), or None for a name it resolved
+      while absent from the scope (a later binding must miss);
+    - ``schema``: when the compile reached the column-type fallback
+      (``ExprCompiler._scope_col_dtype``), which walks every scope table's
+      dtypes, the scope's names and dtypes — not their identities, so a
+      write to a table the query does not read keeps the hit."""
+
+    __slots__ = ("tables", "schema_read", "schema")
+
+    def __init__(self):
+        self.tables: Dict[str, Optional[weakref.ref]] = {}
+        self.schema_read = False
+        self.schema: Optional[dict] = None
+
+    def freeze(self, scope: dict) -> None:
+        if self.schema_read:
+            self.schema = {n: tuple(df.dtypes) for n, df in scope.items()}
+
+    def valid(self, scope: dict) -> bool:
+        for name, ref in self.tables.items():
+            if ref is None:
+                if name in scope:
+                    return False
+            elif ref() is None or scope.get(name) is not ref():
+                return False
+        if self.schema is None:
+            return True
+        return scope.keys() == self.schema.keys() and all(
+            tuple(scope[n].dtypes) == d for n, d in self.schema.items())
+
+
+class _PlanCache:
+    """An LRU of ``key -> (analyzed plan, _ReadSet)`` with one lock around
+    lookup, store and evict, and its counters: a hit, a miss (an eligible
+    query compiled), an eviction (an entry dropped for room or found
+    stale)."""
+
+    def __init__(self, entries: Optional[OrderedDict] = None):
+        self.entries = OrderedDict() if entries is None else entries
+        self.lock = threading.Lock()
+        self.hits = self.misses = self.evictions = 0
+
+    def lookup(self, key, scope: dict,
+               spark: SparkSession) -> Optional[DataFrame]:
+        with self.lock:
+            hit = self.entries.get(key)
+            if hit is not None:
+                self.entries.move_to_end(key)
+        if hit is not None:
+            plan, reads = hit
+            if reads.valid(scope):
+                try:
+                    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset \
+                        .ofRows(spark._jsparkSession, plan)
+                    with self.lock:
+                        self.hits += 1
+                    return DataFrame(jdf, spark)
+                except Exception:
+                    pass  # fall through to recompile
+            with self.lock:
+                if self.entries.get(key) is hit:
+                    del self.entries[key]
+                    self.evictions += 1
         return None
 
+    def miss(self) -> None:
+        with self.lock:
+            self.misses += 1
 
-def _scope_refs_alive(refs: list, scope: dict) -> bool:
-    live = [r() for r in refs]
-    if any(v is None for v in live):
-        return False
-    cur = [v for _, v in sorted(scope.items())]
-    return len(cur) == len(live) and all(a is b for a, b in zip(live, cur))
+    def store(self, key, df: DataFrame, reads: _ReadSet) -> None:
+        try:
+            plan = df._jdf.queryExecution().analyzed()
+        except Exception:
+            return
+        with self.lock:
+            self.entries[key] = (plan, reads)
+            self.entries.move_to_end(key)
+            while len(self.entries) > _PLAN_CACHE_MAX:
+                self.entries.popitem(last=False)
+                self.evictions += 1
+
+    def clear(self) -> None:
+        with self.lock:
+            self.entries.clear()
+
+    def info(self) -> dict:
+        with self.lock:
+            return {"hits": self.hits, "misses": self.misses,
+                    "evictions": self.evictions,
+                    "entries": len(self.entries)}
+
+
+_SHARED = _PlanCache(_PLAN_CACHE)
+
+
+def plan_cache_info() -> dict:
+    """Hits, misses, evictions and entries of the plan cache that serves
+    scope-based :func:`execute`."""
+    return _SHARED.info()
+
+
+def _run_cached(cache: _PlanCache, key_of: Callable[[], Optional[tuple]],
+                q: str, scope: dict, spark: SparkSession,
+                executor: Callable[[], "Executor"]):
+    """Run statement text ``q`` through ``cache``: the one lookup/store
+    path of both owners. ``key_of()`` is the owner's key for ``q``;
+    ``executor()`` is the Executor that runs it on a miss, whose scope
+    holds the same DataFrames as ``scope``."""
+    key = None
+    if (isinstance(scope, dict) and not _VOLATILE_RE.search(q)
+            and all(isinstance(v, DataFrame) for v in scope.values())):
+        key = key_of()
+    if key is not None:
+        df = cache.lookup(key, scope, spark)
+        if df is not None:
+            return df
+    node = parse(q)
+    ex = executor()
+    if not isinstance(node, _QUERY):
+        return ex._execute_statement(node, ex.scope)
+    if key is not None:
+        cache.miss()
+    ex._materialize_written(node)
+    n_reg = _opcache.REGISTRATIONS
+    ex._reads = reads = _ReadSet()
+    try:
+        out = ex._compile_query(node, ex.scope)
+    finally:
+        ex._reads = None
+    if (key is not None and _opcache.REGISTRATIONS == n_reg
+            and key_of() == key):
+        reads.freeze(ex.scope)
+        cache.store(key, out, reads)
+    return out
 
 
 def execute(q: str, scope: Optional[dict] = None,
@@ -1120,44 +1341,7 @@ def execute(q: str, scope: Optional[dict] = None,
     if scope is None:
         scope = _capture_caller_scope(spark)
         return Executor(scope=scope, spark=spark, basepath=basepath).execute(q)
-
-    cacheable = (isinstance(scope, dict)
-                 and all(isinstance(v, DataFrame) for v in scope.values())
-                 and not _VOLATILE_RE.search(q))
-    key = _plan_cache_key(q, scope, spark, basepath) if cacheable else None
-    if key is not None:
-        hit = _PLAN_CACHE.get(key)
-        if hit is not None:
-            plan, refs = hit
-            if not _scope_refs_alive(refs, scope):
-                # a scope DF from the cached compile died and its id may
-                # have been recycled — the plan could be stale; recompile
-                _PLAN_CACHE.pop(key, None)
-            else:
-                try:
-                    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset \
-                        .ofRows(spark._jsparkSession, plan)
-                    return DataFrame(jdf, spark)
-                except Exception:
-                    _PLAN_CACHE.pop(key, None)  # fall through to recompile
-
-    from ..operators import cache as _opcache
-
-    n_reg = _opcache.REGISTRATIONS
-    node = parse(q)
-    ex = Executor(scope=scope, spark=spark, basepath=basepath)
-    out = ex._execute_statement(node, ex.scope)
-    if (key is not None and isinstance(out, DataFrame)
-            and isinstance(node, (ast.Select, ast.SetOp, ast.Pivot,
-                                  ast.Unpivot))
-            and _opcache.REGISTRATIONS == n_reg):
-        try:
-            refs = _scope_refs(scope)
-            if refs is not None:
-                _PLAN_CACHE[key] = (out._jdf.queryExecution().analyzed(),
-                                    refs)
-                while len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-                    _PLAN_CACHE.popitem(last=False)
-        except Exception:
-            pass
-    return out
+    return _run_cached(
+        _SHARED, lambda: _plan_cache_key(q, scope, spark, basepath), q,
+        scope, spark,
+        lambda: Executor(scope=scope, spark=spark, basepath=basepath))

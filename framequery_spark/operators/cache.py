@@ -25,6 +25,14 @@ Each entry belongs to one of two release classes:
   releases the recompute-safe class only; explicit callers that have
   materialized everything (bench reps, tests, teardown) release both.
 
+An entry may have an **owner**: an ``Executor`` registers the local
+checkpoints that bound the lineage of the tables it wrote under its own
+token. Only :func:`release_owned` releases those (``Connection.close()``);
+``release_cached`` releases ownerless entries only, so a live session's
+tables survive a full release, and :func:`forget_owned` drops a collected
+owner's entries without releasing them (results may still read them; the
+ContextCleaner frees blocks nothing references).
+
 ``REGISTRATIONS`` counts every registration, monotonically, plus the
 compile-time events that hold nothing but still make a compiled plan
 unsafe to reuse (:func:`note_compile_materialization`). The executor's
@@ -43,19 +51,19 @@ try:
 except Exception:  # pragma: no cover
     _DEFAULT_LEVEL = None
 
-# (handle, release(blocking), pinned). Persist and broadcast handles are
+# (handle, release(blocking), pinned, owner). Persist and broadcast handles are
 # strong refs on purpose: the cached blocks exist on the JVM side whether or
 # not the Python handle stays reachable, so the registry keeps the handle
 # alive until it is released. Checkpoints and views are held by RDD id and
 # by name. No handle carries data.
-_TRACKED: List[Tuple[object, Callable[[bool], object], bool]] = []
+_TRACKED: List[Tuple[object, Callable[[bool], object], bool, object]] = []
 REGISTRATIONS = 0
 
 
 def _register(handle, release: Callable[[bool], object],
-              pinned: bool) -> None:
+              pinned: bool, owner=None) -> None:
     global REGISTRATIONS
-    _TRACKED.append((handle, release, pinned))
+    _TRACKED.append((handle, release, pinned, owner))
     REGISTRATIONS += 1
 
 
@@ -78,7 +86,8 @@ def persist_tracked(df: DataFrame, level=None) -> DataFrame:
     return df
 
 
-def local_checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
+def local_checkpoint_tracked(df: DataFrame, eager: bool = True,
+                             owner=None) -> DataFrame:
     """``df.localCheckpoint(eager)``, registered as pinned. localCheckpoint
     persists its RDD outside the DataFrame cache manager (neither
     ``df.unpersist()`` nor ``catalog.clearCache()`` drops it), so the
@@ -86,7 +95,9 @@ def local_checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
     plan (a ``LogicalRDD`` over exactly the persisted RDD, eager or not),
     and release unpersists it by id. Holding the id, not the RDD, leaves a
     checkpoint nothing references to the ContextCleaner. The returned
-    DataFrame must not be read after a full release."""
+    DataFrame must not be read after its release: a full
+    ``release_cached()`` when ``owner`` is None, ``release_owned(owner)``
+    otherwise."""
     out = df.localCheckpoint(eager)
     try:
         jsc = df.sparkSession.sparkContext._jsc
@@ -94,7 +105,7 @@ def local_checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
     except Exception:  # pragma: no cover — py4j unavailable shapes
         return out
     _register(rid, lambda blocking: jsc.sc().unpersistRDD(rid, blocking),
-              pinned=True)
+              pinned=True, owner=owner)
     return out
 
 
@@ -120,8 +131,8 @@ def release_one(df: DataFrame) -> None:
     operators that own a persist with a bounded lifetime (a training loop,
     a recursive-CTE block) while the caller may hold OTHER tracked
     resources that must survive (release_cached would drop those too)."""
-    for i, (handle, _, _) in enumerate(_TRACKED):
-        if handle is df:
+    for i, entry in enumerate(_TRACKED):
+        if entry[0] is df:
             del _TRACKED[i]
             break
     try:
@@ -130,10 +141,28 @@ def release_one(df: DataFrame) -> None:
         pass
 
 
+def _release(keep: Callable[[tuple], bool], blocking: bool) -> int:
+    """Release every entry ``keep`` rejects; returns the number released."""
+    released = 0
+    kept = []
+    while _TRACKED:
+        entry = _TRACKED.pop()
+        if keep(entry):
+            kept.append(entry)
+            continue
+        try:
+            entry[1](blocking)
+            released += 1
+        except Exception:  # session already stopped — nothing to release
+            pass
+    _TRACKED.extend(reversed(kept))
+    return released
+
+
 def release_cached(blocking: bool = False,
                    checkpoints: bool = True) -> int:
-    """Release every tracked resource; returns the number released.
-    Idempotent; safe while results are still lazy as far as the
+    """Release every ownerless tracked resource; returns the number
+    released. Idempotent; safe while results are still lazy as far as the
     recompute-safe class goes. Default is non-blocking (fire-and-forget
     block removal); pass ``blocking=True`` when the next measurement must
     not overlap the async removal — back-to-back bench reps with
@@ -144,18 +173,16 @@ def release_cached(blocking: bool = False,
     ``checkpoints=False`` keeps the pinned class (checkpoints, sink views)
     registered and releases only the recompute-safe one, preserving the
     every-result-stays-readable invariant for auto-release hooks."""
-    released = 0
-    kept = []
-    while _TRACKED:
-        entry = _TRACKED.pop()
-        _, release, pinned = entry
-        if pinned and not checkpoints:
-            kept.append(entry)
-            continue
-        try:
-            release(blocking)
-            released += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _TRACKED.extend(reversed(kept))
-    return released
+    return _release(
+        lambda e: e[3] is not None or (e[2] and not checkpoints), blocking)
+
+
+def release_owned(owner, blocking: bool = False) -> int:
+    """Release every resource registered with ``owner``; returns the
+    number released."""
+    return _release(lambda e: e[3] is not owner, blocking)
+
+
+def forget_owned(owner) -> None:
+    """Drop ``owner``'s entries without releasing them."""
+    _TRACKED[:] = [e for e in _TRACKED if e[3] is not owner]

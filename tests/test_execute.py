@@ -694,12 +694,12 @@ def test_plan_cache_invalidates_on_dead_scope_df(spark, scope):
         # kill the original and force a same-key lookup with an impostor
         # DF (same id is what CPython MIGHT produce; we simulate the
         # collision by reusing the recorded key against a new scope)
-        plan, refs = ex_mod._PLAN_CACHE[key]
+        plan, reads = ex_mod._PLAN_CACHE[key]
         del df1, sc
         gc.collect()
-        assert any(r() is None for r in refs), "original should be dead"
+        assert reads.tables["test"]() is None, "original should be dead"
         impostor = {"test": scope["test"].where("a < 0")}
-        assert not ex_mod._scope_refs_alive(refs, impostor)
+        assert not reads.valid(impostor)
         # end-to-end: executing with the impostor scope must NOT reuse
         # the stale plan even if the key matched — the alive-check
         # rejects it; result reflects the impostor's data
