@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions import _let
 from ..functions.registry import REGISTRY
 from ..parser import ast
+from .rewrite import contains_aggregate
 
 def _multiset_fusion(c):
     """SQL:2003 FUSION: multiset union-all of the group's array values.
@@ -958,6 +959,20 @@ class ExprCompiler:
             raise CompileError(f"cannot compile {type(node).__name__}")
         return method(node)
 
+    def _probe_type(self, c: Column):
+        """The Catalyst DataType of *c*, from a schema-only probe over the
+        input relation (else a one-row range): pure analysis, no job runs.
+        None when there is nothing to probe or *c* does not resolve."""
+        probe_df = self.input_df
+        if probe_df is None and self.executor is not None:
+            probe_df = self.executor.spark.range(1)
+        if probe_df is None:
+            return None
+        try:
+            return probe_df.select(c).schema[0].dataType
+        except Exception:
+            return None
+
     # ------------------------------------------------------------ leaf nodes
 
     def _c_Literal(self, node: ast.Literal) -> Column:
@@ -1674,20 +1689,13 @@ class ExprCompiler:
             # '1 day 02:00:00'), not Spark's INTERVAL sql literal; the
             # operand type comes from a Catalyst schema-only probe (same
             # mechanism as pg_typeof — compile-time, no job)
-            probe_df = self.input_df
-            if probe_df is None and self.executor is not None:
-                probe_df = self.executor.spark.range(1)
-            if probe_df is not None:
-                from pyspark.sql import types as T
+            from pyspark.sql import types as T
 
-                try:
-                    dt = probe_df.select(c).schema[0].dataType
-                except Exception:
-                    dt = None
-                if isinstance(dt, T.DayTimeIntervalType):
-                    return _interval_to_pg_text(c)
-                if isinstance(dt, T.YearMonthIntervalType):
-                    return _ym_interval_to_pg_text(c)
+            dt = self._probe_type(c)
+            if isinstance(dt, T.DayTimeIntervalType):
+                return _interval_to_pg_text(c)
+            if isinstance(dt, T.YearMonthIntervalType):
+                return _ym_interval_to_pg_text(c)
         if t in CAST_MAP:
             return c.cast(CAST_MAP[t])
         if base in ("decimal", "numeric"):
@@ -2046,17 +2054,9 @@ class ExprCompiler:
                 # interval arm: resolved by a Catalyst schema-only probe
                 # (same mechanism as pg_typeof); dates/timestamps fall
                 # through to the date segment compiler
-                probe_df = self.input_df
-                if probe_df is None and self.executor is not None:
-                    probe_df = self.executor.spark.range(1)
-                dt = None
-                if probe_df is not None:
-                    try:
-                        dt = probe_df.select(arg).schema[0].dataType
-                    except Exception:
-                        dt = None
                 from pyspark.sql import types as T
 
+                dt = self._probe_type(arg)
                 if isinstance(dt, T.DayTimeIntervalType):
                     return _interval_to_char(arg, raw_fmt)
                 if isinstance(dt, T.YearMonthIntervalType):
@@ -2115,16 +2115,7 @@ class ExprCompiler:
             a0 = node.args[0]
             if isinstance(a0, ast.Literal) and a0.kind == "string":
                 return F.lit("unknown")
-            col = self.compile(a0)
-            probe_df = self.input_df
-            if probe_df is None and self.executor is not None:
-                probe_df = self.executor.spark.range(1)
-            dt = None
-            if probe_df is not None:
-                try:
-                    dt = probe_df.select(col).schema[0].dataType
-                except Exception:
-                    dt = None
+            dt = self._probe_type(self.compile(a0))
             if dt is None:
                 raise CompileError(
                     "pg_typeof: cannot resolve the argument's type in "
@@ -3152,9 +3143,8 @@ class ExprCompiler:
             # (first_value, ...) must NOT take this shortcut — dropping
             # their ORDER BY would silently return partition-order-
             # dependent values.
-            import dataclasses as _dc
-
-            return self._compile_agg(_dc.replace(node, order_within=()))
+            return self._compile_agg(
+                dataclasses.replace(node, order_within=()))
         if name in ("first_value", "first_value_agg", "last_value_agg") \
                 and len(keys) == 1:
             # ordered first/last as aggregates: min_by/max_by on the single
@@ -3292,8 +3282,6 @@ class ExprCompiler:
         another window spec, so it is staged as a pending pre-projection
         column (attached by the relation compiler before the projection
         evaluates this column)."""
-        import dataclasses as _dc
-
         spec = node.spec
         if not spec.order_by:
             raise CompileError("GROUPS frame requires an ORDER BY clause")
@@ -3306,11 +3294,11 @@ class ExprCompiler:
         wdr = wdr.orderBy(*[self._sort_col(s) for s in spec.order_by])
         name = _next_precol_name("gdr")
         self.pending_precols.append((name, F.dense_rank().over(wdr)))
-        new_spec = _dc.replace(
+        new_spec = dataclasses.replace(
             spec, frame_type="range",
             order_by=(ast.SortItem(
                 expr=ast.ColumnRef(parts=(name,), quoted=True)),))
-        return self._c_WindowCall(_dc.replace(node, spec=new_spec))
+        return self._c_WindowCall(dataclasses.replace(node, spec=new_spec))
 
     def _window_exclude(self, node: ast.WindowCall, w, Window) -> Column:
         """pg frame `EXCLUDE CURRENT ROW | GROUP | TIES` for sum/count/avg.
@@ -3627,7 +3615,6 @@ class ExprCompiler:
         this way; other comparisons take the theta plan of
         select.ThetaAggregate, and any other correlated predicate raises.
         The outer-reference rule is select.Correlation's."""
-        from .rewrite import contains_aggregate
         from .select import Correlation, ThetaAggregate
 
         if not isinstance(sel, ast.Select) or sel.from_ is None:
@@ -3781,7 +3768,8 @@ class ExprCompiler:
             col = n > F.lit(0)
             return ~col if node.negated else col
         if any(not isinstance(it, ast.Star)
-               and _contains_plain_agg(it.expr) for it in sel.items):
+               and contains_aggregate(it.expr, AGG_NAMES)
+               for it in sel.items):
             # pg: an aggregate subquery without GROUP BY yields exactly one
             # row even over zero inputs, so EXISTS is constant TRUE
             # (e.g. EXISTS (SELECT max(x) FROM t WHERE false)).
@@ -3877,26 +3865,6 @@ def _subquery_shapes_rows(sel: ast.Select) -> bool:
             or sel.qualify is not None
             or sel.limit is not None or sel.offset is not None
             or bool(sel.distinct_on))
-
-
-def _contains_plain_agg(node: ast.Node) -> bool:
-    """True if the expression tree contains a non-window aggregate call
-    (WindowCall nodes are distinct from Call, so windows never match)."""
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if isinstance(n, ast.Call) and n.name.lower() in AGG_NAMES:
-            return True
-        if isinstance(n, ast.Select):
-            continue  # aggregates inside a nested subquery don't count
-        if dataclasses.is_dataclass(n) and not isinstance(n, type):
-            for f in dataclasses.fields(n):
-                v = getattr(n, f.name)
-                if isinstance(v, ast.Node):
-                    stack.append(v)
-                elif isinstance(v, tuple):
-                    stack.extend(e for e in v if isinstance(e, ast.Node))
-    return False
 
 
 def _apply_sort_direction(c: Column, item: ast.SortItem) -> Column:

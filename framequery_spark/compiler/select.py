@@ -401,8 +401,6 @@ class QueryCompiler:
         where the BY expressions are the arm's own select items at the BY
         columns' positions — so every row carries its root-to-self path and
         each fixpoint step stays a single distributed job."""
-        import dataclasses
-
         if not isinstance(step, ast.Select):
             raise CompileError(
                 "SEARCH DEPTH FIRST / CYCLE need a plain SELECT recursive "
@@ -466,8 +464,6 @@ class QueryCompiler:
         `OVER (w ORDER BY x)` or `WINDOW w2 AS (w1 ...)` — are merged per pg
         rules: partitioning comes from the base (the refinement must not
         re-partition), ordering from the refinement if given, else base."""
-        import dataclasses
-
         specs = dict(sel.windows)
 
         def resolve(spec: ast.WindowSpec, seen=()) -> ast.WindowSpec:
@@ -1702,21 +1698,8 @@ class QueryCompiler:
     def _tf_references_columns(tf: ast.TableFunction) -> bool:
         """True when a FROM-clause table function's arguments reference
         columns (rather than literals) — the pg implicit-LATERAL case."""
-        import dataclasses as _dc
-
-        stack = list(tf.args)
-        while stack:
-            n = stack.pop()
-            if isinstance(n, ast.ColumnRef):
-                return True
-            if _dc.is_dataclass(n) and isinstance(n, ast.Node):
-                for f in _dc.fields(n):
-                    v = getattr(n, f.name)
-                    if isinstance(v, ast.Node):
-                        stack.append(v)
-                    elif isinstance(v, tuple):
-                        stack.extend(x for x in v if isinstance(x, ast.Node))
-        return False
+        return any(isinstance(n, ast.ColumnRef) for a in tf.args
+                   for n in walk(a, into_subqueries=True))
 
     def _compile_table_function(self, tf: ast.TableFunction) -> DataFrame:
         from ..sources.table_functions import compile_table_function

@@ -15,81 +15,23 @@ equivalents are `df.toPandas()` / `df.collect()`.
 from __future__ import annotations
 
 import inspect
+import os
 import re
 import threading
 import weakref
 from collections import OrderedDict
 from typing import Callable, Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..compiler.expressions import CompileError
+from ..compiler.expressions import CompileError, ExprCompiler
+from ..compiler.rewrite import transform, walk
 from ..compiler.select import QueryCompiler
 from ..operators import cache as _opcache
 from ..parser import ast, parse
 from ..sources.local_relation import local_relation
-
-def _rewrite_merge_action(node, s_name=None, src_cols=()):
-    """Rewrite a MERGE RETURNING item tree against the merge plan's helper
-    columns (invisible to `*` expansion, so `RETURNING *` stays pg-shaped):
-
-    - pg-17 `merge_action()` calls -> the `__merge_action` column;
-    - source-qualified refs `<s_name>.c` -> the `__src_c` passthrough
-      (pg 17 allows RETURNING to read the matched source row)."""
-    import dataclasses
-
-    if isinstance(node, ast.Call) and node.name.lower() == "merge_action" \
-            and not node.args:
-        return ast.ColumnRef(parts=("__merge_action",))
-    if isinstance(node, ast.ColumnRef) and s_name is not None \
-            and len(node.parts) == 2 and node.parts[0] == s_name \
-            and node.parts[1] in src_cols:
-        return ast.ColumnRef(parts=(f"__src_{node.parts[1]}",))
-    if dataclasses.is_dataclass(node) and isinstance(node, ast.Node):
-        changes = {}
-        for f in dataclasses.fields(node):
-            v = getattr(node, f.name)
-            if isinstance(v, ast.Node):
-                new = _rewrite_merge_action(v, s_name, src_cols)
-                if new is not v:
-                    changes[f.name] = new
-            elif isinstance(v, tuple):
-                new_t = tuple(_rewrite_merge_action(x, s_name, src_cols)
-                              if isinstance(x, ast.Node) else x for x in v)
-                if any(a is not b for a, b in zip(new_t, v)):
-                    changes[f.name] = new_t
-        if changes:
-            return dataclasses.replace(node, **changes)
-    return node
-
-
-def _rewrite_returning(items, s_name, src_cols):
-    """Item-level MERGE RETURNING rewrite: `<s_name>.*` expands to the
-    source passthrough columns (aliased back to their own names, pg-style);
-    everything else goes through :func:`_rewrite_merge_action`."""
-    out = []
-    for item in items:
-        expr = getattr(item, "expr", item)
-        if isinstance(expr, ast.Star) and expr.table == s_name:
-            out.extend(
-                ast.SelectItem(
-                    expr=ast.ColumnRef(parts=(f"__src_{c}",)), alias=c)
-                for c in src_cols)
-            continue
-        if isinstance(item, ast.SelectItem) and item.alias is None \
-                and isinstance(item.expr, ast.Call) \
-                and item.expr.name.lower() == "merge_action" \
-                and not item.expr.args:
-            # a bare merge_action() names its output column merge_action
-            # in pg; without this the helper name __merge_action leaks
-            out.append(ast.SelectItem(
-                expr=ast.ColumnRef(parts=("__merge_action",)),
-                alias="merge_action"))
-            continue
-        out.append(_rewrite_merge_action(item, s_name, src_cols))
-    return tuple(out)
 
 
 # SHOW options answered with constants so pg clients keep working
@@ -179,13 +121,9 @@ class Executor:
         root = self._effective_table_root()
         if root is None:
             return None
-        import os
-
         parts = name.split(".")
         if any(p in ("", ".", "..") or "/" in p or "\\" in p
                for p in parts):
-            from ..compiler.expressions import CompileError
-
             raise CompileError(f"invalid durable table name: {name!r}")
         return os.path.join(root, *parts[:-1], parts[-1] + ".parquet")
 
@@ -224,21 +162,16 @@ class Executor:
         # <table_root>/<name>.parquet (cached in scope so one session
         # reads one snapshot — pg-repeatable within the session)
         dpath = self._durable_path(name)
-        if dpath is not None:
-            import os
-
-            if os.path.isdir(dpath) or os.path.isfile(dpath):
-                df = self.spark.read.parquet(dpath)
-                scope[name] = df
-                _opcache.note_compile_materialization()
-                return df
+        if dpath is not None and os.path.exists(dpath):
+            df = self.spark.read.parquet(dpath)
+            scope[name] = df
+            _opcache.note_compile_materialization()
+            return df
         try:
             df = self.spark.table(name)
             _opcache.note_compile_materialization()
             return df
         except Exception:
-            from ..compiler.expressions import CompileError
-
             known = ", ".join(sorted(str(k) for k in scope)[:20]) or "(empty)"
             raise CompileError(
                 f"table not found in scope: '{name}' "
@@ -309,8 +242,6 @@ class Executor:
         it, and the ContextCleaner frees the superseded ones."""
         if not self._written:
             return
-        from ..compiler.rewrite import walk
-
         for ref in walk(node, into_subqueries=True):
             if not (isinstance(ref, ast.TableRef)
                     and ref.name in self._written):
@@ -351,15 +282,8 @@ class Executor:
         per-row subplan.
 
         RETURNING sees the post-image target columns plus the matched
-        FROM/USING row's non-colliding columns (bare names; qualified
-        source refs are not supported — same documented limit as MERGE
-        RETURNING before round 6)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from ..compiler.expressions import ExprCompiler
-        from ..compiler.select import QueryCompiler
-
+        FROM/USING row's non-colliding columns by bare name, and every
+        source column through its alias (see _returning)."""
         rels = node.from_ if kind == "update" else node.using
         base = self.resolve_table(scope, node.table).alias(node.table)
         t_cols = list(base.columns)
@@ -367,9 +291,7 @@ class Executor:
         # the nondeterministic ids with a localCheckpoint barrier so both
         # branches see identical values (row order after an upstream
         # shuffle is not guaranteed stable across recomputations)
-        from ..operators.cache import local_checkpoint_tracked
-
-        tagged = (local_checkpoint_tracked(
+        tagged = (_opcache.local_checkpoint_tracked(
                       base.withColumn("__t_id",
                                       F.monotonically_increasing_id()),
                       eager=False)
@@ -397,7 +319,7 @@ class Executor:
             "__rn", F.row_number().over(
                 Window.partitionBy("__t_id").orderBy("__s_id")))
             .where(F.col("__rn") == 1).drop("__rn", "__s_id"))
-        matched = local_checkpoint_tracked(matched, eager=False)
+        matched = _opcache.local_checkpoint_tracked(matched, eager=False)
 
         def tcol(c):
             return F.col(f"`{node.table}`.`{c}`")
@@ -406,10 +328,10 @@ class Executor:
         # hidden prefixed copies of EVERY source column, so RETURNING can
         # resolve alias-qualified source refs even when the name collides
         # with a target column (the _returning rewrite maps `s.c` onto
-        # __src__c)
+        # __src_c)
         def scol(c):
             q = f"`{src_alias}`.`{c}`" if src_alias else f"`{c}`"
-            return F.col(q).alias(f"__src__{c}")
+            return F.col(q).alias(f"__src_{c}")
 
         src_copies = [scol(c) for c in src_cols] if node.returning else []
         if kind == "update":
@@ -450,60 +372,58 @@ class Executor:
         affected frame is bound under the statement's table name so
         qualified refs (`t.col`) resolve.
 
-        For UPDATE ... FROM / DELETE ... USING, `src_alias`/`src_cols`
-        describe the matched source row, carried in the affected frame as
-        hidden __src__<col> copies: alias-qualified source refs (incl.
-        names that collide with target columns) and `alias.*` rewrite onto
-        those, and a bare `*` expands to the visible (non-hidden) columns
-        exactly like pg's output row."""
-        from ..compiler.rewrite import transform
+        For UPDATE ... FROM, DELETE ... USING and MERGE, `src_alias`/
+        `src_cols` describe the matched source row, carried in the affected
+        frame as hidden __src_<col> copies: alias-qualified source refs
+        (incl. names that collide with target columns) and `alias.*`
+        rewrite onto those. MERGE also carries the arm each row took as
+        __merge_action, which `merge_action()` reads; a bare
+        `merge_action()` item keeps the output name merge_action. A bare
+        `*` expands to the visible (non-hidden) columns exactly like pg's
+        output row."""
+        alias = (src_alias or "").lower()
+        hidden = {c: f"__src_{c}" for c in src_cols
+                  if src_alias and f"__src_{c}" in affected.columns}
+        has_action = "__merge_action" in affected.columns
 
-        items = list(items)
-        if src_alias and src_cols:
-            hidden = {c: f"__src__{c}" for c in src_cols
-                      if f"__src__{c}" in affected.columns}
+        def is_action(n: ast.Node) -> bool:
+            return has_action and isinstance(n, ast.Call) \
+                and n.name.lower() == "merge_action" and not n.args
 
-            def rw(n: ast.Node) -> ast.Node:
-                if isinstance(n, ast.ColumnRef) and len(n.parts) == 2 \
-                        and n.parts[0].lower() == src_alias.lower() \
-                        and n.parts[1] in hidden:
-                    return ast.ColumnRef(parts=(hidden[n.parts[1]],),
-                                         quoted=True)
-                return n
+        def rw(n: ast.Node) -> ast.Node:
+            if isinstance(n, ast.ColumnRef) and len(n.parts) == 2 \
+                    and n.parts[0].lower() == alias \
+                    and n.parts[1] in hidden:
+                return ast.ColumnRef(parts=(hidden[n.parts[1]],),
+                                     quoted=True)
+            if is_action(n):
+                return ast.ColumnRef(parts=("__merge_action",), quoted=True)
+            return n
 
-            expanded = []
-            for it in items:
-                e = it.expr if isinstance(it, ast.SelectItem) else it
-                if isinstance(e, ast.Star) and e.table \
-                        and e.table.lower() == src_alias.lower():
-                    expanded.extend(
-                        ast.SelectItem(expr=ast.ColumnRef(
-                            parts=(hidden[c],), quoted=True), alias=c)
-                        for c in src_cols if c in hidden)
-                    continue
-                expanded.append(transform(it, rw))
-            items = expanded
-        if any(isinstance((it.expr if isinstance(it, ast.SelectItem)
-                           else it), ast.Star)
-               and (it.expr if isinstance(it, ast.SelectItem)
-                    else it).table is None for it in items):
-            # bare *: expand to the visible columns so hidden __src__
-            # carriers never leak into the output
-            expanded = []
-            for it in items:
-                e = it.expr if isinstance(it, ast.SelectItem) else it
-                if isinstance(e, ast.Star) and e.table is None:
-                    expanded.extend(
-                        ast.SelectItem(expr=ast.ColumnRef(
-                            parts=(c,), quoted=True), alias=c)
-                        for c in affected.columns
-                        if not c.startswith("__"))
-                else:
-                    expanded.append(it)
-            items = expanded
+        out = []
+        for it in items:
+            e = it.expr if isinstance(it, ast.SelectItem) else it
+            if isinstance(e, ast.Star) and e.table is None:
+                # bare *: the visible columns, so hidden carriers never
+                # leak into the output
+                out.extend(ast.SelectItem(
+                    expr=ast.ColumnRef(parts=(c,), quoted=True), alias=c)
+                    for c in affected.columns if not c.startswith("__"))
+            elif isinstance(e, ast.Star) and hidden \
+                    and e.table.lower() == alias:
+                out.extend(ast.SelectItem(
+                    expr=ast.ColumnRef(parts=(h,), quoted=True), alias=c)
+                    for c, h in hidden.items())
+            elif hidden or has_action:
+                if isinstance(it, ast.SelectItem) and it.alias is None \
+                        and is_action(e):
+                    it = ast.SelectItem(expr=e, alias="merge_action")
+                out.append(transform(it, rw))
+            else:
+                out.append(it)
         tmp = dict(scope)
         tmp[table] = affected
-        sel = ast.Select(items=tuple(items),
+        sel = ast.Select(items=tuple(out),
                          from_=ast.TableRef(parts=(table,)))
         return QueryCompiler(self, tmp).compile_query(sel)
 
@@ -532,11 +452,6 @@ class Executor:
         columns (post-/old-image), merge_action(), and source-qualified
         columns `<src>.c` / `<src>.*` (NULL for NOT MATCHED BY SOURCE rows,
         like pg); unqualified names resolve to the target."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from ..compiler.expressions import CompileError, ExprCompiler
-
         t_name = node.target_alias or node.target.split(".")[-1]
         base = self.resolve_table(scope, node.target)
         t_cols = list(base.columns)
@@ -667,8 +582,8 @@ class Executor:
                             F.col("__action").alias("__merge_action"),
                             *[F.col(f"`{s_name}`.`{c}`").alias(f"__src_{c}")
                               for c in src_cols]))
-        items = _rewrite_returning(node.returning, s_name, src_cols)
-        return self._returning(scope, t_name, affected, items)
+        return self._returning(scope, t_name, affected, node.returning,
+                               src_alias=s_name, src_cols=src_cols)
 
     def _compile_query(self, node, scope: dict) -> DataFrame:
         return QueryCompiler(self, scope).compile_query(node)
@@ -703,9 +618,7 @@ class Executor:
                 # so later base-table changes do not show until REFRESH.
                 # (Distributed blocks, not driver memory; at cluster scale
                 # the same cost a real MV's heap table pays.)
-                from ..operators.cache import local_checkpoint_tracked
-
-                df = local_checkpoint_tracked(df, eager=True)
+                df = _opcache.local_checkpoint_tracked(df, eager=True)
                 self._matviews[node.name] = node.query
             elif not node.temp and not node.view:
                 # durable catalog (r12): a plain CREATE TABLE AS under a
@@ -716,11 +629,7 @@ class Executor:
                 # the same root re-resolves the table by name.
                 dpath = self._durable_path(node.name)
                 if dpath is not None:
-                    import os
-
-                    if (not node.replace
-                            and (os.path.isdir(dpath)
-                                 or os.path.isfile(dpath))
+                    if (not node.replace and os.path.exists(dpath)
                             and node.name not in scope):
                         if node.if_not_exists:
                             return None
@@ -736,9 +645,7 @@ class Executor:
             if query is None:
                 raise CompileError(
                     f"\"{node.name}\" is not a materialized view")
-            from ..operators.cache import local_checkpoint_tracked
-
-            scope[node.name] = local_checkpoint_tracked(
+            scope[node.name] = _opcache.local_checkpoint_tracked(
                 self._compile_query(query, scope), eager=True)
             return None
         if isinstance(node, ast.WithDml):
@@ -889,7 +796,6 @@ class Executor:
                 # the delete stays inside table_root
                 dpath = self._durable_path(name)
                 if dpath is not None:
-                    import os
                     import shutil
 
                     if os.path.isdir(dpath):
@@ -908,9 +814,6 @@ class Executor:
             return local_relation(
                 self.spark, rows, "col_name string, data_type string")
         if isinstance(node, ast.InsertInto):
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
             base = self.resolve_table(scope, node.table)
             if node.query is None:
                 # DEFAULT VALUES: one row of NULLs (no column defaults here)
@@ -1020,8 +923,6 @@ class Executor:
                     return self._returning(scope, node.table, deleted,
                                            node.returning)
                 return None
-            from ..compiler.expressions import ExprCompiler
-
             ec = ExprCompiler(self, scope=scope)
             cond = ec.compile(node.where)
             cols = list(base.columns)
@@ -1037,10 +938,6 @@ class Executor:
                                        node.returning)
             return None
         if isinstance(node, ast.Update):
-            from pyspark.sql import functions as F
-
-            from ..compiler.expressions import ExprCompiler
-
             base = self.resolve_table(scope, node.table).alias(node.table)
             ec = ExprCompiler(self, scope=scope)
             cond = (ec.compile(node.where).eqNullSafe(True)

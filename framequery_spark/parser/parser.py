@@ -41,16 +41,6 @@ RESERVED_STOP = {
     "natural",
 }
 
-AGGREGATE_NAMES = {
-    # reference set (src/framequery/parser/_parser.py:323-334) plus common ones
-    "avg", "max", "min", "sum", "count", "every", "any", "some", "bool_and",
-    "bool_or", "stddev_pop", "stddev_samp", "stddev", "var_samp", "var_pop",
-    "variance", "collect", "first_value_agg", "array_agg", "string_agg",
-    "count_distinct", "approx_count_distinct", "corr", "covar_pop",
-    "covar_samp", "median", "percentile_cont", "mode",
-    "json_agg", "jsonb_agg", "json_object_agg", "jsonb_object_agg",
-}
-
 _INTERVAL_UNIT_MICROS = {
     "microsecond": 1, "microseconds": 1, "us": 1,
     "millisecond": 1_000, "milliseconds": 1_000, "ms": 1_000,
@@ -87,51 +77,6 @@ def _interval_micros(text: str, parser) -> int:
             raise parser.error(f"unknown interval unit {unit!r}")
         total += n * _INTERVAL_UNIT_MICROS[unit]
     return total
-
-
-def _all_aggregate_names() -> set:
-    """Aggregate membership for GROUP BY ALL classification: the parser's
-    reference-derived set unioned with the compiler's full AGG_NAMES (single
-    source of truth for newly added aggregates — regr_*, approx_percentile,
-    percentile_disc, hll_*, grouping, ... — so a select list using one of
-    them never misclassifies the aggregate as a group key). Lazy import:
-    the compiler imports parser.ast, so importing it at module load would
-    be circular."""
-    try:
-        from ..compiler.expressions import AGG_NAMES
-        return AGGREGATE_NAMES | AGG_NAMES
-    except ImportError:  # pragma: no cover - parser used standalone
-        return AGGREGATE_NAMES
-
-
-WINDOW_ONLY_NAMES = {
-    "row_number", "rank", "dense_rank", "percent_rank", "cume_dist", "ntile",
-    "lag", "lead", "first_value", "last_value", "nth_value",
-}
-
-
-def _contains_agg_or_window(node: ast.Node) -> bool:
-    """AST walk for GROUP BY ALL desugaring: True if the expression contains
-    an aggregate call or a window call (those stay out of the group keys)."""
-    import dataclasses as _dc
-
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if isinstance(n, ast.WindowCall):
-            return True
-        if isinstance(n, ast.Call) and (
-                n.name.lower() in _all_aggregate_names()
-                or n.name.lower() == "count"):
-            return True
-        if _dc.is_dataclass(n):
-            for f in _dc.fields(n):
-                v = getattr(n, f.name)
-                if isinstance(v, ast.Node):
-                    stack.append(v)
-                elif isinstance(v, tuple):
-                    stack.extend(e for e in v if isinstance(e, ast.Node))
-    return False
 
 
 class Parser:
@@ -1058,13 +1003,19 @@ class Parser:
                 # GROUP BY ALL (DuckDB/modern SQL): group by every
                 # select-list expression that contains no aggregate or
                 # window call — desugared here, where the items are in hand
+                # (lazy import: the compiler imports parser.ast)
+                from ..compiler.expressions import AGG_NAMES
+                from ..compiler.rewrite import contains_aggregate, walk
+
                 self.advance()
                 keys = []
                 for it in items:
                     if not isinstance(it, ast.SelectItem):
                         raise self.error(
                             "GROUP BY ALL cannot expand a * select item")
-                    if not _contains_agg_or_window(it.expr):
+                    if not (contains_aggregate(it.expr, AGG_NAMES)
+                            or any(isinstance(n, ast.WindowCall)
+                                   for n in walk(it.expr))):
                         keys.append(it.expr)
                 group_by = tuple(keys)
             else:

@@ -345,6 +345,15 @@ def test_merge_returning_source_columns(spark):
         "RETURNING a, b, s.b AS src_b").collect())
     # a=2: 20+99; a=3: 30+88; a=4 inserted with b=0, source b=77
     assert got == [(2, 119, 99), (3, 118, 88), (4, 0, 77)]
+    # both inside a CASE branch
+    ex = _executor(spark)
+    got = sorted(tuple(r) for r in ex.execute(
+        "MERGE INTO t USING s ON t.a = s.a "
+        "WHEN MATCHED THEN UPDATE SET b = s.b "
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.a, s.b) "
+        "RETURNING a, CASE WHEN merge_action() = 'INSERT' THEN s.b "
+        "ELSE -1 END AS x").collect())
+    assert got == [(2, -1), (3, -1), (4, 77)]
 
 
 def test_merge_returning_source_star_and_null_for_by_source(spark):
@@ -450,7 +459,7 @@ def test_insert_default_values(spark):
 
 def test_update_from_returning_colliding_source_cols(spark):
     """Round 7: alias-qualified source refs in RETURNING resolve even when
-    the name collides with a target column (the __src__ carrier rewrite)."""
+    the name collides with a target column (the __src_ carrier rewrite)."""
     import pandas as pd
 
     t = pd.DataFrame({"id": [1, 2, 3], "v": [10, 20, 30]})
@@ -461,6 +470,13 @@ def test_update_from_returning_colliding_source_cols(spark):
                      "RETURNING t.id, t.v, s.v AS src_v, s.tag")
     assert sorted(tuple(r) for r in ret.collect()) == \
         [(2, 201, 200, "a"), (3, 301, 300, "b")]
+    ex = fq.Executor(scope={"t": spark.createDataFrame(t),
+                            "s": spark.createDataFrame(s)}, spark=spark)
+    ret = ex.execute("UPDATE t SET v = s.v + 1 FROM s WHERE t.id = s.id "
+                     "RETURNING t.v, s.*")
+    assert ret.columns == ["v", "id", "v", "tag"]
+    assert sorted(tuple(r) for r in ret.collect()) == \
+        [(201, 2, 200, "a"), (301, 3, 300, "b")]
 
 
 def test_delete_using_returning_star_and_source_star(spark):

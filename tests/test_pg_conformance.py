@@ -206,6 +206,14 @@ QUERIES = [
     "then 1 else 0 end",
     # GROUP BY ALL classifying newly-added aggregates (regr_*) correctly
     "select c1, round(regr_slope(c2, c2), 6) from test group by all",
+    # an aggregate inside a CASE branch is still an aggregate: GROUP BY ALL
+    # keeps the item out of the keys, and EXISTS over it is constant TRUE
+    "select c1, case when sum(c2) > 9 then 'big' else 'small' end "
+    "from test group by all",
+    "select c1, exists (select case when max(c4) > 100 then 1 end "
+    "from other where false) from test",
+    # a scalar subquery's aggregate is not the outer query's: a group key
+    "select c1, (select max(c4) from other) as m from test group by all",
     # round-5: gcd/lcm (JVM-side Euclid fold; Spark has no builtin)
     "select gcd(c2, c4), lcm(c2, c4) from test join other on c1 = c3",
     "select gcd(0, 0), gcd(12, 0), gcd(-12, 18), lcm(0, 0), lcm(4, 6)",

@@ -435,6 +435,13 @@ def test_implicit_lateral_and_pg_alias_naming(spark):
         "LATERAL unnest(arr) WITH ORDINALITY AS u WHERE a = 1 ORDER BY 2",
         scope, spark=spark).collect()
     assert [(r.value, r.ordinality) for r in out] == [(1, 1), (2, 2)]
+    # a column reference inside a CASE branch makes the call lateral too;
+    # the rows are pg's (DuckDB 1.0 rejects lateral generate_series
+    # arguments, so it cannot be the oracle here)
+    out = [tuple(r) for r in fq.execute(
+        "SELECT a, v FROM t, generate_series(1, CASE WHEN t.a > 1 THEN t.a "
+        "ELSE 1 END) AS s(v) ORDER BY a, v", scope, spark=spark).collect()]
+    assert out == [(1, 1), (2, 1), (2, 2)]
 
 
 def test_quality_scores_in_sql(spark, tpch_scope):
