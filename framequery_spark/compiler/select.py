@@ -1024,7 +1024,21 @@ class QueryCompiler:
             result = result.filter(F.col("__having"))
 
         if window_items:
-            # post-aggregation window phase: expressions over agg outputs
+            # post-aggregation window phase: expressions over agg outputs.
+            # A column of the input that is neither grouped nor inside an
+            # aggregate survives the rewrite as itself, and the aggregate
+            # result has no such column (pg's grouping error, not Spark's
+            # unresolved-column error naming the hidden __g/__out columns)
+            ungrouped = {c.lower() for c in df.columns} \
+                - {c.lower() for c in result.columns}
+            for expr in window_items.values():
+                for n in walk(expr):
+                    if isinstance(n, ast.ColumnRef) \
+                            and n.parts[-1].lower() in ungrouped:
+                        raise CompileError(
+                            f'column "{".".join(n.parts)}" must appear in '
+                            "the GROUP BY clause or be used in an "
+                            "aggregate function")
             ec_post = ExprCompiler(self.session, agg_context=False,
                                    scope=self.scope)
             out_cols = [ec_post.compile(expr).alias(f"__out{i}")
@@ -1297,32 +1311,30 @@ class QueryCompiler:
             return sub.alias(rel.alias)
         if isinstance(rel, ast.Values):
             return self._compile_values(rel)
-        if isinstance(rel, ast.TableFunction):
-            return self._compile_table_function(rel)
-        if isinstance(rel, ast.JsonTable):
-            from ..sources.table_functions import compile_json_table
+        if isinstance(rel, (ast.TableFunction, ast.JsonTable)):
+            from ..sources.table_functions import compile_from_function
 
-            return compile_json_table(self, None, rel)
+            return compile_from_function(self, None, rel)
         if isinstance(rel, ast.Join):
             return self._compile_join(rel)
         raise CompileError(f"cannot compile relation {type(rel).__name__}")
 
     def _compile_join(self, join: ast.Join) -> DataFrame:
         left = self.compile_relation(join.left)
-        if isinstance(join.right, ast.TableFunction) and (
-                join.right.lateral
-                or self._tf_references_columns(join.right)):
-            # pg: LATERAL is implicit for table functions in FROM —
-            # `FROM t, unnest(t.arr)` applies per-row without the keyword
-            return self._compile_lateral(left, join.right)
-        if isinstance(join.right, ast.JsonTable):
-            # pg 17: JSON_TABLE in FROM is implicitly lateral
-            if join.kind not in ("cross", "inner"):
-                raise CompileError(
-                    f"JSON_TABLE does not support {join.kind} join")
-            from ..sources.table_functions import compile_json_table
+        if isinstance(join.right, ast.JsonTable) \
+                and join.kind not in ("cross", "inner"):
+            raise CompileError(
+                f"JSON_TABLE does not support {join.kind} join")
+        # pg: LATERAL is implicit for table functions in FROM — `FROM t,
+        # unnest(t.arr)` applies per-row without the keyword — and for
+        # JSON_TABLE (pg 17)
+        if isinstance(join.right, ast.JsonTable) or (
+                isinstance(join.right, ast.TableFunction)
+                and (join.right.lateral
+                     or self._tf_references_columns(join.right))):
+            from ..sources.table_functions import compile_from_function
 
-            return compile_json_table(self, left, join.right)
+            return compile_from_function(self, left, join.right)
         if isinstance(join.right, ast.SubqueryRel) and join.right.lateral:
             how = {"cross": "inner", "inner": "inner",
                    "left": "left"}.get(join.kind)
@@ -1700,17 +1712,6 @@ class QueryCompiler:
         columns (rather than literals) — the pg implicit-LATERAL case."""
         return any(isinstance(n, ast.ColumnRef) for a in tf.args
                    for n in walk(a, into_subqueries=True))
-
-    def _compile_table_function(self, tf: ast.TableFunction) -> DataFrame:
-        from ..sources.table_functions import compile_table_function
-
-        return compile_table_function(self, tf)
-
-    def _compile_lateral(self, left: DataFrame,
-                         tf: ast.TableFunction) -> DataFrame:
-        from ..sources.table_functions import compile_lateral
-
-        return compile_lateral(self, left, tf)
 
     # ----------------------------------------------------------------- helpers
 

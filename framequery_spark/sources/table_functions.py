@@ -3,20 +3,42 @@
 Reference surface: copy_from, json_each, json_array_elements
 (src/framequery/executor/_pandas.py:58-62, src/framequery/util/_funcs.py:117-167)
 plus generate_series (defined but unregistered in the reference — we register
-it, SURVEY §2.9) and unnest. The json/unnest functions compile to native
-`explode` plans instead of the reference's per-row iterrows loop
-(src/framequery/executor/_pandas.py:307-317 — the anti-pattern at scale).
+it, SURVEY §2.9) and unnest.
+
+Like the reference, which evaluates a table function with one rule in FROM
+or under LATERAL, every FROM-clause table function and JSON_TABLE compiles
+through one entry, `compile_from_function(qc, left, rel)`; `left` is None
+for a standalone call. The functions split in two families:
+
+- relation family (standalone only): functions of literal arguments that
+  return a whole relation. An all-integer-literal generate_series stays a
+  distributed `spark.range`; then read_parquet/csv/json, copy_from, user
+  `add_table_function` functions and the pipeline operators. `AS u(...)`
+  renames their output columns.
+- explode family: every other generate_series, unnest, json_each and
+  json_array_elements (with their pg spellings), string_to_table,
+  regexp_split_to_table, JSON_TABLE and user lateral functions. Each is one
+  staged lateral explode over the left rows, or over a one-row frame when
+  the call stands alone, so both forms share every naming, ordinality and
+  typing rule. They compile to native `explode` plans instead of the
+  reference's per-row iterrows loop (src/framequery/executor/_pandas.py:
+  307-317 — the anti-pattern at scale).
 """
 
 from __future__ import annotations
 
+import uuid
 from typing import List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..parser import ast
 from ..compiler.expressions import CompileError
+# canonical pg split and sequence semantics live in functions.registry, so
+# the scalar and select-list forms can never diverge from the table functions
+from ..functions.registry import pg_sequence_column, pg_split_column
 
 
 def _literal_args(args) -> List[object]:
@@ -32,22 +54,6 @@ def _literal_args(args) -> List[object]:
     return out
 
 
-def compile_table_function(qc, tf: ast.TableFunction) -> DataFrame:
-    df = _compile_table_function(qc, tf)
-    if tf.column_names:
-        # pg `AS u(x[, ...])`: rename the first N output columns
-        cols = df.columns
-        if len(tf.column_names) > len(cols):
-            raise CompileError(
-                f"table function {tf.name} returns {len(cols)} columns, "
-                f"alias names {len(tf.column_names)}")
-        df = df.select(*[
-            F.col(c).alias(tf.column_names[i]) if i < len(tf.column_names)
-            else F.col(c)
-            for i, c in enumerate(cols)]).alias(tf.alias or tf.name)
-    return df
-
-
 # pg spells several explode-based functions in json/jsonb/text variants;
 # values here are JSON text already, so they share one implementation
 _TVF_ALIASES = {
@@ -58,155 +64,120 @@ _TVF_ALIASES = {
     "jsonb_array_elements_text": "json_array_elements",
 }
 
+# the explode family's built-ins: each numbers its input order, so each
+# supports WITH ORDINALITY
+_EXPLODE_FUNCTIONS = ("generate_series", "unnest", "json_each",
+                      "json_array_elements", "string_to_table",
+                      "regexp_split_to_table")
 
-# canonical pg split semantics live in functions.registry so the scalar
-# string_to_array and the string_to_table TVF can never diverge
-from ..functions.registry import pg_split_column as _pg_split
-
-
-from ..functions.registry import pg_sequence_column
-
-
-def _pg_sequence(start, stop, step=None, interval_step: bool = False):
-    # canonical pg sequence semantics live in functions.registry (shared
-    # with the select-list generate_series SRF); interval_step is moot now
-    # that the typed zero is `step - step`
-    return pg_sequence_column(start, stop, step)
+_FILE_FUNCTIONS = ("read_parquet", "read_csv", "read_json", "copy_from")
 
 
-def _compile_table_function(qc, tf: ast.TableFunction) -> DataFrame:
-    spark = qc.session.spark
-    name = _TVF_ALIASES.get(tf.name, tf.name)
-    alias = tf.alias or tf.name
+def compile_from_function(qc, left, rel) -> DataFrame:
+    """Compile a FROM-clause table function or JSON_TABLE. `left` is the
+    relation it applies to row by row (explicit or implicit LATERAL), None
+    for a standalone call, which runs the same explode over a one-row
+    frame."""
+    if isinstance(rel, ast.JsonTable):
+        name, alias, arg_nodes = "json_table", rel.alias or "json_table", \
+            (rel.context,)
+    else:
+        name = _TVF_ALIASES.get(rel.name, rel.name)
+        alias, arg_nodes = rel.alias or rel.name, rel.args
+        if rel.ordinality and name not in _EXPLODE_FUNCTIONS:
+            raise CompileError(
+                "WITH ORDINALITY is supported for unnest / json_each / "
+                "json_array_elements / string_to_table / "
+                "regexp_split_to_table / generate_series (functions with a "
+                "defined input order)")
+        if left is None and _is_relation_function(qc, rel, name):
+            return _relation_function(qc, rel, name)
+        if name not in _EXPLODE_FUNCTIONS \
+                and name not in qc.session.lateral_functions:
+            raise CompileError(f"unknown table function: {name}")
+    hidden = []
+    if left is None:
+        hidden.append("__one_" + uuid.uuid4().hex[:8])
+        left = qc.session.spark.range(1).toDF(hidden[0])
+    ec = qc._expr_compiler()
+    args = [ec.compile(a) for a in arg_nodes]
+    # scalar-subquery arguments attach to the base like any projection's;
+    # their helper columns leave with the base's hidden ones
+    base, helpers = qc._attach_pending(left, ec)
+    hidden.extend(helpers)
+    if name == "json_table":
+        out = _json_table(base, rel, args[0], alias)
+    elif name in _EXPLODE_FUNCTIONS:
+        out = _explode_builtin(base, rel, name, args, alias)
+    else:
+        # user lateral functions run as Arrow-batched UDTFs on the
+        # executors (never a driver-side loop)
+        from .lateral_udtf import apply_lateral_udtf
 
-    if tf.ordinality and name not in ("json_each", "json_array_elements",
-                                      "unnest", "string_to_table",
-                                      "regexp_split_to_table",
-                                      "generate_series"):
-        raise CompileError(
-            "WITH ORDINALITY is supported for unnest / json_each / "
-            "json_array_elements / string_to_table / regexp_split_to_table "
-            "/ generate_series (functions with a defined input order)")
+        func, schema = qc.session.lateral_functions[name]
+        out = apply_lateral_udtf(base, func, schema, args, alias)
+    return out.drop(*hidden) if hidden else out
 
+
+def _is_relation_function(qc, tf: ast.TableFunction, name: str) -> bool:
+    """A standalone call that returns a whole relation. generate_series
+    over integer literals stays a distributed spark.range: a one-row
+    explode would build the whole series in one row on one task."""
     if name == "generate_series":
-        first = tf.args[0] if tf.args else None
-        if isinstance(first, ast.Literal) and first.kind in ("date", "timestamp"):
-            # date/timestamp series with an interval step: F.sequence is
-            # inclusive-stop like pg. One driver row → explode; a time grid
-            # is bounded (callers needing a distributed grid use
-            # time_bucket_gapfill, which spreads sequence over groups).
-            ec = qc._expr_compiler()
-            start_c = ec.compile(tf.args[0])
-            stop_c = ec.compile(tf.args[1])
-            if len(tf.args) > 2:
-                step = tf.args[2]
-                if not (isinstance(step, ast.Literal)
-                        and step.kind == "interval"):
-                    raise CompileError(
-                        "generate_series over dates needs an INTERVAL step")
-                from ..compiler.expressions import interval_expr
+        return all(isinstance(a, ast.Literal) and a.kind == "int"
+                   for a in tf.args)
+    return name not in _EXPLODE_FUNCTIONS and (
+        name in _FILE_FUNCTIONS or name in qc.session.table_functions
+        or name in _OPERATOR_TFS)
 
-                step_c = interval_expr(step.value)
-            else:
-                step_c = F.expr("INTERVAL '1 day'")
-            # pg promotes date arguments to timestamp for the series
-            seq = _pg_sequence(start_c.cast("timestamp"),
-                               stop_c.cast("timestamp"), step_c)
-            cname = _single_col_name(tf)
-            out = (spark.range(1)
-                   .select(F.explode(seq).alias(cname)))
-            if tf.ordinality:
-                out = (spark.range(1)
-                       .select(F.posexplode(seq)
-                               .alias("__pos", cname))
-                       .select(F.col(cname),
-                               (F.col("__pos") + 1).alias("ordinality")))
-            return out.alias(alias)
-        args = _literal_args(tf.args)
-        start = int(args[0])
-        stop = int(args[1])
-        step = int(args[2]) if len(args) > 2 else 1
+
+def _relation_function(qc, tf: ast.TableFunction, name: str) -> DataFrame:
+    if name == "generate_series":
+        values = [a.value for a in tf.args]
+        start, stop = values[0], values[1]
+        step = values[2] if len(values) > 2 else 1
         # inclusive stop (pg semantics; reference util/_funcs.py:161-167)
         end = stop + (1 if step > 0 else -1)
         cname = _single_col_name(tf)
-        out = spark.range(start, end, step).toDF(cname)
+        df = qc.session.spark.range(start, end, step).toDF(cname)
         if tf.ordinality:
             # the ordinal is arithmetic on the value — stays distributed
-            out = out.withColumn(
+            df = df.withColumn(
                 "ordinality",
                 ((F.col(cname) - start) / step + 1).cast("long"))
-        return out.alias(alias)
-
-    if name in ("read_parquet", "read_csv", "read_json"):
-        # DuckDB-style file table functions:
-        #   SELECT * FROM read_parquet('path'), read_csv('f.csv','delimiter',';')
-        # Scans stay fully declarative, so Catalyst pushdown/pruning applies.
-        from .copy import read_csv as _read_any
-
+    else:
         args = _literal_args(tf.args)
-        options = dict(zip(args[1::2], args[2::2]))
-        options["format"] = name.split("_", 1)[1]
-        return _read_any(qc.session, args[0], options).alias(alias)
+        if name in _FILE_FUNCTIONS:
+            # DuckDB-style file table functions, scans that stay fully
+            # declarative (Catalyst pushdown/pruning applies):
+            #   SELECT * FROM read_parquet('path'), read_csv('f.csv','delimiter',';')
+            # and the reference's copy_from('<file>', 'delimiter', ';', ...)
+            # (executor/_pandas.py:222-230)
+            from .copy import read_csv
 
-    if name == "regexp_split_to_table":
-        # constant-argument form: SELECT * FROM regexp_split_to_table('a,b', ',')
-        ec = qc._expr_compiler()
-        split = F.split(ec.compile(tf.args[0]), ec.compile(tf.args[1]))
-        cname = tf.alias or "regexp_split_to_table"
-        return (spark.range(1)
-                .select(F.explode(split).alias(cname))
-                .alias(alias))
+            options = dict(zip(args[1::2], args[2::2]))
+            if name != "copy_from":
+                options["format"] = name.split("_", 1)[1]
+            df = read_csv(qc.session, args[0], options)
+        elif name in qc.session.table_functions:
+            df = qc.session._ensure_df(qc.session.table_functions[name](*args))
+        else:
+            df = _OPERATOR_TFS[name](qc, args)
+    if tf.column_names:
+        df = df.toDF(*_alias_names(tf, df.columns))
+    return df.alias(tf.alias or tf.name)
 
-    if name == "copy_from":
-        # copy_from('<file>', 'delimiter', ';', ...)
-        # (reference executor/_pandas.py:222-230)
-        args = _literal_args(tf.args)
-        path = args[0]
-        options = dict(zip(args[1::2], args[2::2]))
-        from .copy import read_csv
 
-        return read_csv(qc.session, path, options).alias(alias)
-
-    if name == "unnest" and len(tf.args) > 1:
-        # pg multi-array unnest: zip to the longest length, NULL-padded
-        ec = qc._expr_compiler()
-        cols = [ec.compile(a) for a in tf.args]
-        base = spark.range(1).select(*[col.alias(f"__a{i}")
-                                       for i, col in enumerate(cols)])
-        out = _explode_multi(base, [F.col(f"__a{i}")
-                                    for i in range(len(cols))],
-                             alias, tf.ordinality, tf.column_names)
-        return out.drop(*[f"__a{i}" for i in range(len(cols))])
-
-    if name == "string_to_table":
-        ec = qc._expr_compiler()
-        arr = _pg_split(ec.compile(tf.args[0]).cast("string"),
-                        ec.compile(tf.args[1]))
-        base = spark.range(1).select(arr.alias("__arg"))
-        return _explode_json(base, F.col("__arg"), "unnest", alias,
-                             ordinality=tf.ordinality,
-                             col_name=_single_col_name(tf)).drop("__arg")
-
-    if name in ("json_each", "json_array_elements", "unnest"):
-        # constant-argument form: build a one-row frame then explode
-        ec = qc._expr_compiler()
-        col = ec.compile(tf.args[0])
-        base = spark.range(1).select(col.alias("__arg"))
-        return _explode_json(base, F.col("__arg"), name, alias,
-                             ordinality=tf.ordinality,
-                             col_name=_single_col_name(tf)).drop("__arg")
-
-    if name in qc.session.table_functions:
-        args = _literal_args(tf.args)
-        df = qc.session.table_functions[name](*args)
-        df = qc.session._ensure_df(df)
-        return df.alias(alias)
-
-    if name in _OPERATOR_TFS:
-        args = _literal_args(tf.args)
-        return _OPERATOR_TFS[name](qc, args).alias(alias)
-
-    raise CompileError(f"unknown table function: {name}")
+def _alias_names(tf: ast.TableFunction, produced: List[str]) -> List[str]:
+    """pg `AS u(x[, ...])`: the names rename the produced columns in order
+    and the unnamed tail keeps its defaults; pg errors on more names than
+    columns, and so does this."""
+    names = list(tf.column_names)
+    if len(names) > len(produced):
+        raise CompileError(
+            f"table function {tf.name} returns {len(produced)} columns, "
+            f"alias names {len(names)}")
+    return names + list(produced[len(names):])
 
 
 # --------------------------------------------- pipeline operators in SQL
@@ -943,232 +914,132 @@ def _jt_rows(el, pos, columns):
         .otherwise(F.array(full_struct(-1, None)))
 
 
-def compile_json_table(qc, left, jt: ast.JsonTable) -> DataFrame:
+def _json_table(base: DataFrame, jt: ast.JsonTable, ctx,
+                alias: str) -> DataFrame:
     """pg 17 JSON_TABLE: one row per element of the row-path array (or one
     row for a non-array path), columns extracted per element and cast to
     their declared types.
 
-    Implemented as the same native lateral explode the json TVFs use
-    (Generate over the left rows — no join shuffle): the row source is
-    from_json(..., array<string>) of the row-path array, each element
-    staying JSON text; per-column extraction is get_json_object on the
-    element. FOR ORDINALITY columns ride posexplode's position. When the
-    context references the left relation the call is implicitly lateral
-    (pg 17 semantics); standalone calls run over a one-row frame. NESTED
-    PATH expands recursively IN-ROW via _jt_rows (still one Generate):
-    OUTER parent-child, UNION siblings — pg's default plan."""
-    import uuid
-
-    spark = qc.session.spark
-    alias = jt.alias or "json_table"
-    standalone = left is None
-    if standalone:
-        left = spark.range(1)
-    ec = qc._expr_compiler()
-    ctx = ec.compile(jt.context).cast("string")
-    arr = _jt_elem_array(ctx, jt.path)
+    The row source is from_json(..., array<string>) of the row-path array,
+    each element staying JSON text; per-column extraction is
+    get_json_object on the element. FOR ORDINALITY columns ride
+    posexplode's position. NESTED PATH expands recursively IN-ROW via
+    _jt_rows (still one Generate): OUTER parent-child, UNION siblings —
+    pg's default plan."""
+    arr = _jt_elem_array(ctx.cast("string"), jt.path)
     names = [n for n, _ in _jt_fields(jt.columns)]
     if len(set(n.lower() for n in names)) != len(names):
         raise CompileError(
             "JSON_TABLE column names must be unique across the whole "
             "COLUMNS tree (including NESTED paths)")
-    has_nested = any(e[0] is None for e in jt.columns)
-    tmp = "__jt_" + uuid.uuid4().hex[:8]
-    if has_nested:
-        rows = F.flatten(F.transform(
-            arr, lambda el, pi: _jt_rows(el, pi, jt.columns)))
-        staged = left.withColumn(tmp, rows)
-        right = spark.tvf.posexplode(F.col(tmp).outer()) \
-            .select(*[F.col("col")[n].alias(n) for n in names])
+    el = F.col("col")
+    if any(e[0] is None for e in jt.columns):
+        arr = F.flatten(F.transform(
+            arr, lambda row_el, pi: _jt_rows(row_el, pi, jt.columns)))
+        cols = [el[n].alias(n) for n in names]
     else:
-        staged = left.withColumn(tmp, arr)
-        el = F.col("col")
-        out_cols = []
+        cols = []
         for cname, tname, cpath in jt.columns:
             if tname is None:  # FOR ORDINALITY
-                out_cols.append((F.col("pos") + 1).cast("long").alias(cname))
+                cols.append((F.col("pos") + 1).cast("long").alias(cname))
                 continue
             path = cpath if cpath is not None else f"$.{cname}"
             raw = el if path == "$" else F.get_json_object(el, path)
-            out_cols.append(_jt_cast(raw, tname).alias(cname))
-        right = spark.tvf.posexplode(F.col(tmp).outer()).select(*out_cols)
-    out = staged.lateralJoin(right.alias(alias)).drop(tmp)
-    if standalone:
-        out = out.drop("id")
-    return out
+            cols.append(_jt_cast(raw, tname).alias(cname))
+    return _lateral_explode(base, arr, alias, cols, ordinality=True)
 
 
-def compile_lateral(qc, left: DataFrame, tf: ast.TableFunction) -> DataFrame:
-    """LATERAL f(expr-over-left) — compiles to native explode for the json
-    built-ins; user lateral functions run as Arrow-batched UDTF-style
-    applyInPandas (never a driver-side loop)."""
-    name = _TVF_ALIASES.get(tf.name, tf.name)
-    alias = tf.alias or tf.name
-    if name == "unnest" and len(tf.args) > 1:
-        ec = qc._expr_compiler()
-        return _explode_multi(left, [ec.compile(a) for a in tf.args],
-                              alias, tf.ordinality, tf.column_names)
-    if name == "generate_series":
-        # per-row series: explode(sequence(start, stop[, step])) — one
-        # Generate over the left rows, no join shuffle; F.sequence is
-        # inclusive-stop like pg for both integer and timestamp series
-        ec = qc._expr_compiler()
-        args = [ec.compile(a) for a in tf.args]
-        seq = _pg_sequence(args[0], args[1],
-                           args[2] if len(args) > 2 else None)
-        return _explode_json(left, seq, "unnest", alias,
-                             ordinality=tf.ordinality,
-                             col_name=_single_col_name(tf),
-                             col_names=tf.column_names)
-    if name == "string_to_table":
-        ec = qc._expr_compiler()
-        arr = _pg_split(ec.compile(tf.args[0]).cast("string"),
-                        ec.compile(tf.args[1]))
-        return _explode_json(left, arr, "unnest", alias,
-                             ordinality=tf.ordinality,
-                             col_name=_single_col_name(tf),
-                             col_names=tf.column_names)
-    if name in ("json_each", "json_array_elements", "unnest"):
-        ec = qc._expr_compiler()
-        arg = ec.compile(tf.args[0])
-        # `AS u(x[, ord])` column names are applied INSIDE the lateral
-        # relation (before its SubqueryAlias) so the qualified forms
-        # (`u.x`) resolve too — a rename projection ABOVE the alias strips
-        # the qualifier from the renamed columns (pg resolves both).
-        return _explode_json(left, arg, name, alias,
-                             ordinality=tf.ordinality,
-                             col_name=_single_col_name(tf),
-                             col_names=tf.column_names)
-
-    if name == "regexp_split_to_table":
-        # pg: one row per split piece; rides the same native explode path
-        ec = qc._expr_compiler()
-        arg = F.split(ec.compile(tf.args[0]), ec.compile(tf.args[1]))
-        return _explode_json(left, arg, "unnest", alias,
-                             ordinality=tf.ordinality,
-                             col_name=_single_col_name(tf),
-                             col_names=tf.column_names)
-
-    if name in qc.session.lateral_functions:
-        from .lateral_udtf import apply_lateral_udtf
-
-        func, schema = qc.session.lateral_functions[name]
-        ec = qc._expr_compiler()
-        arg_cols = [ec.compile(a) for a in tf.args]
-        return apply_lateral_udtf(left, func, schema, arg_cols, alias)
-
-    raise CompileError(f"unknown lateral table function: {name}")
+_DATETIME_TYPES = (T.DateType, T.TimestampType, T.TimestampNTZType)
+_INTERVAL_TYPES = (T.DayTimeIntervalType, T.YearMonthIntervalType,
+                   T.CalendarIntervalType)
 
 
-def _explode_json(df: DataFrame, arg, name: str, alias: str,
-                  ordinality: bool = False,
-                  col_name: str = "value",
-                  col_names=None) -> DataFrame:
-    """Explode a JSON value column via a native lateral join (Spark 4
-    DataFrame.lateralJoin + spark.tvf.explode). Values are returned as JSON
-    text (the scalar-typed analogue of the reference's Python objects).
+def _series_array(base: DataFrame, start, stop, step=None):
+    """generate_series as one array, pg's empty-set semantics included.
+    pg has no date form: a date/timestamp series promotes to timestamp and
+    needs an INTERVAL step. The argument types come from a schema-only
+    probe over the base (analysis, no job)."""
+    types = [f.dataType for f in base.select(
+        start, *([] if step is None else [step])).schema]
+    if isinstance(types[0], _DATETIME_TYPES):
+        if step is None or not isinstance(types[1], _INTERVAL_TYPES):
+            raise CompileError(
+                "generate_series over dates needs an INTERVAL step")
+        start, stop = start.cast("timestamp"), stop.cast("timestamp")
+    return pg_sequence_column(start, stop, step)
 
-    The lateral right side is a proper aliased relation, so the produced
-    columns resolve BOTH bare (`key`) and alias-qualified (`b.key`) —
-    matching the reference's `alias/@/col` prefixing for lateral children
-    (reference: executor/_pandas.py:292-319). The correlated argument is
-    staged as a hidden left column first: `.outer()` marks a single
-    attribute, while the argument may be an arbitrary expression.
 
-    Physically this stays a Generate (explode) over the left rows — no join
-    shuffle; the plan is identical to the old select("*", explode(...))
-    formulation."""
-    import uuid
-
-    spark = df.sparkSession
-    tmp = "__lat_" + uuid.uuid4().hex[:8]
-    if name == "unnest":
-        staged = df.withColumn(tmp, arg)
-    else:
-        staged = df.withColumn(tmp, arg.cast("string"))
-    ref = F.col(tmp).outer()
-    # WITH ORDINALITY: posexplode's pos + 1 — exact pg semantics, since the
-    # ordinal numbers the INPUT order, which an explode preserves row-locally
-    tvf = spark.tvf.posexplode if ordinality else spark.tvf.explode
-    # pg column-alias list `AS u(x[, ...])`: positional over the produced
-    # columns (json_each: key, value[, ordinality]; single-column
-    # functions: value[, ordinality] — names[0] already arrived as
-    # col_name via _single_col_name). Applied here, INSIDE the relation
-    # the SubqueryAlias wraps, so `u.x` and bare `x` both resolve.
-    cn = list(col_names or [])
-    # pg errors on more alias names than produced columns; silently
-    # ignoring the surplus would leave wrong-looking-but-unnamed columns
-    # (and the non-lateral compile_table_function already raises)
-    produced = (2 if name == "json_each" else 1) + (1 if ordinality else 0)
-    if len(cn) > produced:
-        raise CompileError(
-            f"table function {name} returns {produced} columns, "
-            f"alias names {len(cn)}")
-
-    def _nm(pos: int, default: str) -> str:
-        return cn[pos] if pos < len(cn) else default
-
+def _explode_builtin(base: DataFrame, tf: ast.TableFunction, name: str,
+                     args, alias: str) -> DataFrame:
+    """An explode-family built-in: the array it explodes over `base`, the
+    value columns of one element, and their pg names."""
+    el = F.col("col")
+    to_array = None
     if name == "json_each":
-        ordname = _nm(2, "ordinality")
-        ordcols = ((F.col("pos") + 1).alias(ordname),) if ordinality else ()
-        entries = F.map_entries(F.from_json(ref, "map<string,string>"))
-        right = (tvf(entries)
-                 .select(F.col("col.key").alias(_nm(0, "key")),
-                         F.col("col.value").alias(_nm(1, "value")),
-                         *ordcols))
+        arr = args[0].cast("string")
+        to_array = lambda ref: F.map_entries(
+            F.from_json(ref, "map<string,string>"))
+        values, defaults = [el["key"], el["value"]], ["key", "value"]
+    elif name == "unnest" and len(args) > 1:
+        # pg multi-array unnest: zip to the longest length (arrays_zip
+        # NULL-pads) and explode once
+        arr = F.arrays_zip(*[a.alias(f"z{i}") for i, a in enumerate(args)])
+        values = [el[f"z{i}"] for i in range(len(args))]
+        defaults = [f"unnest_{i + 1}" for i in range(len(args))]
     else:
-        ordname = _nm(1, "ordinality")
-        ordcols = ((F.col("pos") + 1).alias(ordname),) if ordinality else ()
-        if name == "json_array_elements":
-            right = (tvf(F.from_json(ref, "array<string>"))
-                     .select(F.col("col").alias(col_name), *ordcols))
-        else:  # unnest: native array column
-            right = tvf(ref).select(F.col("col").alias(col_name), *ordcols)
-    return staged.lateralJoin(right.alias(alias)).drop(tmp)
+        if name == "generate_series":
+            arr = _series_array(base, *args)
+        elif name == "string_to_table":
+            arr = pg_split_column(args[0], args[1])
+        elif name == "regexp_split_to_table":
+            arr = F.split(args[0], args[1])
+        elif name == "json_array_elements":
+            arr = args[0].cast("string")
+            to_array = lambda ref: F.from_json(ref, "array<string>")
+        else:  # unnest: a native array
+            arr = args[0]
+        values, defaults = [el], [_single_col_name(tf)]
+    if tf.ordinality:
+        # posexplode's pos + 1 — exact pg semantics, since the ordinal
+        # numbers the INPUT order, which an explode preserves row-locally
+        values.append(F.col("pos") + 1)
+        defaults.append("ordinality")
+    cols = [c.alias(n) for c, n in zip(values, _alias_names(tf, defaults))]
+    return _lateral_explode(base, arr, alias, cols, tf.ordinality, to_array)
 
 
-def _explode_multi(df: DataFrame, arrs, alias: str,
-                   ordinality: bool, column_names) -> DataFrame:
-    """pg `unnest(a, b, ...)`: zip the arrays to the longest length
-    (arrays_zip NULL-pads) and explode once — one Generate, no join."""
-    spark = df.sparkSession
-    import uuid
+def _lateral_explode(base: DataFrame, arr, alias: str, cols,
+                     ordinality: bool = False, to_array=None) -> DataFrame:
+    """The one staged lateral explode. `arr`, any expression over `base`,
+    is staged as a hidden column first, because `.outer()` marks a single
+    attribute; the right side (pos)explodes it, through `to_array` when
+    the staged value is JSON text, and projects `cols`, which read the
+    generator's `col` (element) and `pos` (0-based position).
 
+    The right side is an aliased relation, and the `AS u(x, ...)` names are
+    applied inside it, so the produced columns resolve both bare (`key`)
+    and alias-qualified (`b.key`), matching the reference's `alias/@/col`
+    prefixing of lateral children (executor/_pandas.py:292-319).
+    Physically this stays a Generate over the base rows, no join
+    shuffle."""
+    spark = base.sparkSession
     tmp = "__lat_" + uuid.uuid4().hex[:8]
-    staged = df.withColumn(tmp, F.arrays_zip(
-        *[a.alias(f"z{i}") for i, a in enumerate(arrs)]))
     ref = F.col(tmp).outer()
-    tvf = spark.tvf.posexplode if ordinality else spark.tvf.explode
-    names = list(column_names) if column_names else \
-        [f"unnest_{i + 1}" for i in range(len(arrs))]
-    outs = [F.col("col")[f"z{i}"].alias(names[i] if i < len(names)
-                                        else f"unnest_{i + 1}")
-            for i in range(len(arrs))]
-    if ordinality:
-        oname = (names[len(arrs)] if len(names) > len(arrs)
-                 else "ordinality")
-        outs.append((F.col("pos") + 1).alias(oname))
-    right = tvf(ref).select(*outs)
-    return staged.lateralJoin(right.alias(alias)).drop(tmp)
+    gen = spark.tvf.posexplode if ordinality else spark.tvf.explode
+    right = gen(to_array(ref) if to_array else ref).select(*cols)
+    return base.withColumn(tmp, arr).lateralJoin(right.alias(alias)) \
+        .drop(tmp)
 
 
 def _single_col_name(tf: ast.TableFunction) -> str:
-    """pg naming rule for single-column table functions: an explicit alias
-    renames the COLUMN (`unnest(a) AS u` -> column u, selectable bare);
-    `AS u(x)` names the column x explicitly; WITH ORDINALITY makes the
-    result two-column, so the alias stays a table alias and the value
-    column keeps the repo default name "value"."""
-    if tf.column_names:
-        return tf.column_names[0]
-    if tf.alias and not tf.ordinality and tf.name in (
-            "unnest", "json_array_elements", "json_array_elements_text",
-            "jsonb_array_elements", "jsonb_array_elements_text",
-            "regexp_split_to_table", "string_to_table"):
+    """pg naming rule for a single-column table function's value column:
+    an alias renames the COLUMN (`unnest(a) AS u` -> column u, selectable
+    bare), unless WITH ORDINALITY makes the result two-column and the
+    alias stays a table alias. Otherwise generate_series and
+    regexp_split_to_table name it after the function, as pg does; the
+    others keep the repo default "value". `AS u(x)` renames it after."""
+    if tf.alias and not tf.ordinality:
         return tf.alias
-    if tf.name == "generate_series":
-        # same pg rule as unnest: under WITH ORDINALITY the alias names the
-        # TABLE, and the value column keeps its pg name
-        if tf.alias and not tf.ordinality:
-            return tf.alias
-        return "generate_series"
+    if tf.name in ("generate_series", "regexp_split_to_table"):
+        return tf.name
     return "value"

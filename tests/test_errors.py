@@ -262,3 +262,14 @@ def test_column_bytea_hex_invalid_raises(spark):
     rows = fq.execute("select encode(s::bytea, 'hex') e from h",
                       sc, spark=spark).collect()
     assert rows[0].e == "414a42"
+
+
+@pytest.mark.parametrize("group_by", ["g", "ALL"])
+def test_window_over_ungrouped_column(spark, group_by):
+    # pg's grouping error names the column, not the engine's hidden
+    # __g/__out columns an unresolved-column error would list
+    scope = {"t": spark.createDataFrame([(1, 2), (1, 3)], "g int, n int")}
+    with pytest.raises(CompileError, match='column "n" must appear in the '
+                       "GROUP BY clause or be used in an aggregate function"):
+        fq.execute(f"SELECT g, sum(n) OVER () FROM t GROUP BY {group_by}",
+                   scope, spark=spark)

@@ -47,8 +47,10 @@ def test_capture_plans_strips_session_ids():
     spec.loader.exec_module(mod)
     one = ("Scan ExistingRDD [k#12L, v#13] MapPartitionsRDD[36] at "
            "localCheckpoint\nExchange hashpartitioning(k#12L, 8), "
-           "ENSURE_REQUIREMENTS, [plan_id=101]")
+           "ENSURE_REQUIREMENTS, [plan_id=101]\n"
+           "Generate explode(__lat_f4378a6b#7), [k#12L], false, [col#8]")
     two = one.replace("#12", "#40").replace("#13", "#41").replace(
-        "[36]", "[52]").replace("=101", "=217")
+        "[36]", "[52]").replace("=101", "=217").replace(
+        "f4378a6b", "0c1d2e3f")
     assert mod._strip_ids(one) == mod._strip_ids(two)
     assert "[36]" not in mod._strip_ids(one)

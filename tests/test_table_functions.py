@@ -76,8 +76,7 @@ def test_lateral_ordinality_alias_on_series_and_split(spark, scope):
 
 def test_lateral_surplus_alias_names_error(spark, scope):
     # r13 (ADVICE): pg errors when the alias list names more columns than
-    # the function produces; the lateral path must too (the non-lateral
-    # compile_table_function already raised)
+    # the function produces, in the lateral form as in the standalone one
     from framequery_spark.compiler.expressions import CompileError
 
     for q in (
@@ -499,3 +498,92 @@ def test_kmeans_fit_in_sql(spark, tpch_scope):
     out = fq.execute(q, tpch_scope, spark=spark).collect()
     assert len(out) == 4 and all(r.dims == 64 for r in out)
     assert sum(r.n for r in out) == tpch_scope["embeddings"].count()
+
+
+# Each explode-family function, called standalone with constant arguments
+# and under LATERAL over a one-row table whose columns feed the same values,
+# must produce the same columns and rows: both forms compile through the one
+# staged explode, so every naming, ordinality and typing rule is shared.
+_FORMS = [
+    ("date_series",
+     "generate_series(date '2024-01-01', date '2024-01-03', "
+     "interval '1 day')",
+     "generate_series(one.d, one.e, interval '1 day')"),
+    ("int_series", "generate_series(1, 1 + 2)", "generate_series(1, one.n)"),
+    ("unnest_one", "unnest(array[1, 2])", "unnest(one.a)"),
+    ("unnest_two", "unnest(array[1, 2], array['x', 'y', 'z'])",
+     "unnest(one.a, one.b)"),
+    ("json_each", """json_each('{"a": "1", "b": "2"}')""", "json_each(one.j)"),
+    ("json_array_elements", "json_array_elements('[5, 3]')",
+     "json_array_elements(one.arr)"),
+    ("string_to_table", "string_to_table('a,b', ',')",
+     "string_to_table(one.s, ',')"),
+    ("regexp_split_to_table", "regexp_split_to_table('a,b', ',')",
+     "regexp_split_to_table(one.s, ',')"),
+]
+_SUFFIXES = ["", " WITH ORDINALITY", " AS u(x)",
+             " WITH ORDINALITY AS u(x, o)"]
+
+
+@pytest.fixture(scope="module")
+def one(spark):
+    import datetime
+
+    return spark.createDataFrame(
+        [(3, "a,b", datetime.date(2024, 1, 1), datetime.date(2024, 1, 3),
+          [1, 2], ["x", "y", "z"], '{"a": "1", "b": "2"}', "[5, 3]")],
+        "n int, s string, d date, e date, a array<int>, b array<string>, "
+        "j string, arr string")
+
+
+@pytest.mark.parametrize("suffix", _SUFFIXES,
+                         ids=["plain", "ordinality", "alias", "ord_alias"])
+@pytest.mark.parametrize("const_call,lateral_call",
+                         [f[1:] for f in _FORMS], ids=[f[0] for f in _FORMS])
+def test_standalone_and_lateral_forms_agree(spark, one, const_call,
+                                            lateral_call, suffix):
+    scope = {"one": one}
+    alone = fq.execute(f"SELECT * FROM {const_call}{suffix}", scope,
+                       spark=spark)
+    per_row = fq.execute(f"SELECT * FROM one, LATERAL {lateral_call}{suffix}",
+                         scope, spark=spark)
+    n_left = len(one.columns)
+    assert per_row.columns[n_left:] == alone.columns
+    assert [tuple(r)[n_left:] for r in per_row.collect()] == \
+        [tuple(r) for r in alone.collect()]
+
+
+def test_scalar_subquery_series_arguments(spark):
+    # an uncorrelated scalar subquery argument attaches to the explode's
+    # base in both forms (implicit LATERAL and standalone); the rows are
+    # pg's — DuckDB 1.0 rejects lateral generate_series arguments, so it
+    # cannot be the oracle here
+    scope = {"t": spark.createDataFrame([(1, 3), (2, 1)], "k int, n int")}
+    out = fq.execute("SELECT v FROM generate_series(1, (SELECT max(n) "
+                     "FROM t)) AS s(v) ORDER BY v", scope, spark=spark)
+    assert [tuple(r) for r in out.collect()] == [(1,), (2,), (3,)]
+    out = fq.execute("SELECT k, v FROM t, generate_series(1, (SELECT max(n) "
+                     "FROM t)) AS s(v) ORDER BY k, v", scope, spark=spark)
+    assert [tuple(r) for r in out.collect()] == [
+        (1, 1), (1, 2), (1, 3), (2, 1), (2, 2), (2, 3)]
+
+
+def test_standalone_json_table_keeps_an_id_column(spark):
+    # the one-row frame a standalone call explodes over carries a hidden
+    # column, so a produced column named `id` survives
+    out = fq.execute(
+        """SELECT * FROM json_table('[{"id": 1}, {"id": 2}]', '$[*]' """
+        "COLUMNS (id int PATH '$.id'))", {}, spark=spark)
+    assert out.columns == ["id"]
+    assert [tuple(r) for r in out.collect()] == [(1,), (2,)]
+
+
+def test_date_series_needs_interval_step(spark, one):
+    # pg has no generate_series(date, date): both forms refuse it alike
+    from framequery_spark.compiler.expressions import CompileError
+
+    for q in ("SELECT * FROM generate_series(date '2024-01-01', "
+              "date '2024-01-03')",
+              "SELECT * FROM one, generate_series(one.d, one.e)"):
+        with pytest.raises(CompileError, match="INTERVAL step"):
+            fq.execute(q, {"one": one}, spark=spark)

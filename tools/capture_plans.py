@@ -6,8 +6,9 @@ Usage:
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<entry>_<suffix>.txt (round default
 r13) for each named entry (default: a built-in list of the bench's most
 expensive entries). The suffix is "before" / "after". Expression ids
-(`#<id>`), exchange `plan_id=<id>` numbers and RDD ids (`RDD[<id>]`, e.g.
-a checkpoint scan's `MapPartitionsRDD[36] at localCheckpoint`) are
+(`#<id>`), exchange `plan_id=<id>` numbers, RDD ids (`RDD[<id>]`, e.g.
+a checkpoint scan's `MapPartitionsRDD[36] at localCheckpoint`) and the
+random 8-hex suffix of staged hidden columns (`__lat_f4378a6b`) are
 stripped before writing, so a before/after pair diffs empty when only ids
 moved.
 
@@ -38,6 +39,7 @@ DEFAULT_ENTRIES = [
 def _strip_ids(txt: str) -> str:
     """Drop the per-session id counters an explain string carries."""
     txt = re.sub(r"RDD\[\d+\]", "RDD[]", txt)
+    txt = re.sub(r"\b(__[a-z]+_)[0-9a-f]{8}\b", r"\1", txt)
     return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", txt))
 
 
