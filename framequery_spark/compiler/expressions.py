@@ -1285,14 +1285,16 @@ class ExprCompiler:
                 return self._compile_range_binary(node)
         left = self.compile(node.left)
         right = self.compile(node.right)
-        lk = self._operand_kind(node.left)
-        rk = self._operand_kind(node.right)
         if op == "and":
             return left & right
         if op == "or":
             return left | right
         if op == "+":
-            # pg date + int = date (Spark needs explicit date_add)
+            # pg date + int = date (Spark needs explicit date_add). The
+            # operand kinds are probed here and under "-" only: a probe may
+            # read the scope schemas, which ties a cached plan to them
+            lk = self._operand_kind(node.left)
+            rk = self._operand_kind(node.right)
             if lk == "date" and rk == "int":
                 return F.date_add(left, right.cast("int"))
             if lk == "int" and rk == "date":
@@ -1314,6 +1316,8 @@ class ExprCompiler:
                 return jsonb_minus_udf("keys")(jt, F.to_json(right))
             return jsonb_minus_udf("key")(jt, right.cast("string"))
         if op == "-":
+            lk = self._operand_kind(node.left)
+            rk = self._operand_kind(node.right)
             if lk == "date" and rk == "date":
                 # pg date - date = integer days (Spark yields an interval).
                 # Applied only when BOTH operands resolve to date —

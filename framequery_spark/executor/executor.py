@@ -268,102 +268,6 @@ class Executor:
         self._plans.clear()
         _opcache.release_owned(self._owner)
 
-    def _exec_dml_join(self, node, scope: dict, kind: str):
-        """pg `UPDATE t SET ... FROM rels WHERE cond` and
-        `DELETE FROM t USING rels WHERE cond`.
-
-        Shape: tag target rows with an id, inner-join the FROM/USING
-        relation tree on the WHERE condition (equality conjuncts become
-        hash-join keys under Catalyst), keep ONE match per target row
-        (row_number over the join columns — pg leaves the choice
-        unspecified; sorting makes it deterministic), then rebuild the
-        table: updated rows replace their originals / deleted ids are
-        anti-joined away. One join + one window + one id-join — never a
-        per-row subplan.
-
-        RETURNING sees the post-image target columns plus the matched
-        FROM/USING row's non-colliding columns by bare name, and every
-        source column through its alias (see _returning)."""
-        rels = node.from_ if kind == "update" else node.using
-        base = self.resolve_table(scope, node.table).alias(node.table)
-        t_cols = list(base.columns)
-        # __t_id feeds two plan branches (match join + rebuild join); pin
-        # the nondeterministic ids with a localCheckpoint barrier so both
-        # branches see identical values (row order after an upstream
-        # shuffle is not guaranteed stable across recomputations)
-        tagged = (_opcache.local_checkpoint_tracked(
-                      base.withColumn("__t_id",
-                                      F.monotonically_increasing_id()),
-                      eager=False)
-                  .alias(node.table))
-        src = QueryCompiler(self, scope).compile_relation(rels)
-        src_cols = [c for c in src.columns if not c.startswith("__")]
-        src_alias = getattr(rels, "alias", None) or (
-            rels.parts[-1] if isinstance(rels, ast.TableRef) else None)
-        src = src.withColumn("__s_id", F.monotonically_increasing_id())
-        if src_alias:
-            # withColumn drops the relation alias; restore for qualified refs
-            src = src.alias(src_alias)
-        ec = ExprCompiler(self, scope=scope)
-        cond = (ec.compile(node.where).eqNullSafe(True)
-                if node.where is not None else F.lit(True))
-        if ec.pending_scalar or ec.pending_correlated or ec.pending_theta:
-            raise CompileError(
-                f"subqueries in {kind.upper()} ... "
-                f"{'FROM' if kind == 'update' else 'USING'} conditions are "
-                "not supported — use MERGE or a plain WHERE")
-        joined = tagged.join(src, cond, "inner")
-        # matched feeds both the rebuild join and RETURNING — pin the
-        # arbitrary one-match choice so the two consumers agree
-        matched = (joined.withColumn(
-            "__rn", F.row_number().over(
-                Window.partitionBy("__t_id").orderBy("__s_id")))
-            .where(F.col("__rn") == 1).drop("__rn", "__s_id"))
-        matched = _opcache.local_checkpoint_tracked(matched, eager=False)
-
-        def tcol(c):
-            return F.col(f"`{node.table}`.`{c}`")
-
-        extra = [c for c in src_cols if c not in t_cols]
-        # hidden prefixed copies of EVERY source column, so RETURNING can
-        # resolve alias-qualified source refs even when the name collides
-        # with a target column (the _returning rewrite maps `s.c` onto
-        # __src_c)
-        def scol(c):
-            q = f"`{src_alias}`.`{c}`" if src_alias else f"`{c}`"
-            return F.col(q).alias(f"__src_{c}")
-
-        src_copies = [scol(c) for c in src_cols] if node.returning else []
-        if kind == "update":
-            new_vals = {c: ec.compile(e) for c, e in node.assignments}
-            unknown = [c for c in new_vals if c not in t_cols]
-            if unknown:
-                raise CompileError(f"UPDATE: unknown column(s) {unknown}")
-            post = matched.select(
-                F.col("__t_id"),
-                *[(new_vals[c].cast(base.schema[c].dataType).alias(c)
-                   if c in new_vals else tcol(c).alias(c)) for c in t_cols],
-                *[F.col(c) for c in extra], *src_copies)
-            upd = post.select(
-                "__t_id", F.lit(True).alias("__hit"),
-                *[F.col(c).alias(f"__new_{c}") for c in t_cols])
-            scope[node.table] = tagged.join(upd, "__t_id", "left").select(*[
-                F.when(F.col("__hit").eqNullSafe(True), F.col(f"__new_{c}"))
-                .otherwise(tcol(c)).alias(c) for c in t_cols])
-            affected = post.drop("__t_id")
-        else:  # delete
-            hit = matched.select("__t_id").distinct()
-            scope[node.table] = (tagged.join(hit, "__t_id", "left_anti")
-                                 .select(*[tcol(c).alias(c) for c in t_cols]))
-            affected = matched.select(
-                *[tcol(c).alias(c) for c in t_cols],
-                *[F.col(c) for c in extra], *src_copies)
-        if node.returning:
-            return self._returning(scope, node.table, affected,
-                                   node.returning, src_alias=src_alias,
-                                   src_cols=src_cols)
-        return None
-
     def _returning(self, scope: dict, table: str, affected: DataFrame,
                    items, src_alias: str = None,
                    src_cols=()) -> DataFrame:
@@ -427,18 +331,89 @@ class Executor:
                          from_=ast.TableRef(parts=(table,)))
         return QueryCompiler(self, tmp).compile_query(sel)
 
-    def _exec_merge(self, node, scope: dict):
-        """MERGE INTO: one full-outer join of target and source on the ON
-        condition, then a single conditional projection implements every
-        WHEN arm with first-match semantics — matched rows take the first
-        satisfied MATCHED arm, target-only rows the first NOT MATCHED BY
-        SOURCE arm (default: keep), source-only rows the first NOT MATCHED
-        [BY TARGET] arm (default: no insert). A window count over the
-        target row id raises at execution time if a target row matches
-        more than one source row (pg: "MERGE command cannot affect row a
-        second time") — the check rides the same plan, no second pass.
-        Scale shape: one equi/theta join + one hash-partitioned window;
-        nothing is collected. Beyond parity: the reference has no MERGE.
+    def _join_dml_as_merge(self, node) -> ast.Merge:
+        """`UPDATE t SET ... FROM rels WHERE c` and `DELETE FROM t USING
+        rels WHERE c` as the MERGE they mean: the FROM/USING relations are
+        the source, the WHERE is the ON condition, and one MATCHED arm
+        updates or deletes."""
+        if isinstance(node, ast.Update):
+            source = node.from_
+            arm = ast.MergeAction(kind="update", assignments=node.assignments)
+        else:
+            source = node.using
+            arm = ast.MergeAction(kind="delete")
+        on = node.where if node.where is not None \
+            else ast.Literal(value=True, kind="bool")
+        return ast.Merge(target=node.table, source=source, on=on,
+                         matched=(arm,), returning=node.returning)
+
+    def _upsert_as_merge(self, node, df: DataFrame, cols) -> ast.Merge:
+        """INSERT ... ON CONFLICT (k) DO UPDATE as a MERGE whose source is
+        the proposed rows `df`, bound as `__excluded` under the alias
+        `excluded`: a conflict takes the MATCHED UPDATE arm, a new key the
+        NOT MATCHED INSERT arm. RETURNING rides the MERGE's affected rows:
+        a conflict row whose DO UPDATE ... WHERE failed takes no arm, so it
+        is neither updated nor returned (pg semantics).
+
+        pg raises when the batch itself carries a duplicate conflict key
+        ("ON CONFLICT DO UPDATE command cannot affect row a second time").
+        For keys already in the table the MERGE duplicate-match guard
+        catches this, but two batch rows sharing a NEW key would both take
+        the insert arm, so the batch is checked here, eagerly. NULL keys
+        never conflict in pg (NULL <> NULL for uniqueness) and are left
+        out of the check."""
+        keys = list(node.conflict_cols)
+        non_null = df
+        for k in keys:
+            non_null = non_null.where(F.col(k).isNotNull())
+        dup = (non_null.groupBy(*keys).count()
+               .where(F.col("count") > 1).limit(1).collect())
+        if dup:
+            raise ValueError(
+                "ON CONFLICT DO UPDATE command cannot affect row a "
+                f"second time (duplicate conflict key in batch: "
+                f"{tuple(dup[0][k] for k in keys)})")
+        on = None
+        for c in keys:
+            eq = ast.Binary(op="=", left=ast.ColumnRef(parts=(node.table, c)),
+                            right=ast.ColumnRef(parts=("excluded", c)))
+            on = eq if on is None else ast.Binary(op="and", left=on, right=eq)
+        return ast.Merge(
+            target=node.table, source=ast.TableRef(parts=("__excluded",)),
+            on=on, source_alias="excluded",
+            matched=(ast.MergeAction(
+                kind="update", condition=node.conflict_where,
+                assignments=node.conflict_assignments),),
+            not_matched=(ast.MergeAction(
+                kind="insert", insert_values=tuple(
+                    ast.ColumnRef(parts=("excluded", c)) for c in cols)),),
+            returning=node.returning)
+
+    def _exec_merge(self, node, scope: dict, one_match: bool = False):
+        """MERGE INTO, and the one path for every DML statement that joins
+        its target to a source (UPDATE ... FROM, DELETE ... USING and
+        INSERT ... ON CONFLICT DO UPDATE are rewritten to MERGE).
+
+        One join of target and source on the ON condition, then a single
+        conditional projection implements every WHEN arm with first-match
+        semantics — matched rows take the first satisfied MATCHED arm,
+        target-only rows the first NOT MATCHED BY SOURCE arm (default:
+        keep), source-only rows the first NOT MATCHED [BY TARGET] arm
+        (default: no insert). The join is a full outer join only when a NOT
+        MATCHED [BY TARGET] arm needs the source-only rows; otherwise a
+        left outer join keeps the target-only rows. A window over the
+        target row id then enforces one match per target row: by default
+        it raises at execution time if a target row matches more than one
+        source row (pg: "MERGE command cannot affect row a second time");
+        with `one_match` (UPDATE ... FROM, DELETE ... USING) it keeps one
+        match per target row — pg leaves which one unspecified — and a
+        local checkpoint pins that choice so the rebound table and
+        RETURNING see the same rows. Scale shape: one equi/theta join + one
+        hash-partitioned window; nothing is collected. Beyond parity: the
+        reference has no MERGE.
+
+        SET values and WHEN conditions may hold subqueries, attached to the
+        joined rows; a subquery in the ON condition raises a CompileError.
 
         With node.returning (pg 17), returns the RETURNING projection over
         the affected rows — the arm each row took is computed as a
@@ -449,26 +424,42 @@ class Executor:
         are neither counted nor returned, matching pg. Update/insert rows
         return the post-image; delete rows the old image. Returns None when
         no RETURNING clause is present. RETURNING may reference target
-        columns (post-/old-image), merge_action(), and source-qualified
-        columns `<src>.c` / `<src>.*` (NULL for NOT MATCHED BY SOURCE rows,
-        like pg); unqualified names resolve to the target."""
+        columns (post-/old-image), source columns whose names no target
+        column or other source column shares (bare), merge_action(), and
+        source-qualified columns `<src>.c` / `<src>.*` of a single source
+        relation (NULL for NOT MATCHED BY SOURCE rows, like pg)."""
         t_name = node.target_alias or node.target.split(".")[-1]
         base = self.resolve_table(scope, node.target)
         t_cols = list(base.columns)
+        for a in node.matched + node.not_matched_by_source:
+            unknown = [c for c, _ in a.assignments if c not in t_cols]
+            if unknown:
+                raise CompileError(f"column(s) {unknown} of relation "
+                                   f'"{node.target}" do not exist')
         tj = (base.withColumn("__t_id", F.monotonically_increasing_id())
               .withColumn("__t_mark", F.lit(True))
               .alias(t_name))
         src = node.source
         s_df = QueryCompiler(self, scope).compile_relation(src)
-        s_name = (node.source_alias or getattr(src, "alias", None)
-                  or (src.parts[-1] if isinstance(src, ast.TableRef)
-                      else "__source"))
+        s_df = s_df.withColumn("__s_mark", F.lit(True))
         # withColumn drops the relation's alias — re-establish it so
-        # qualified refs (src.col / excluded.col) keep resolving
-        s_df = s_df.withColumn("__s_mark", F.lit(True)).alias(s_name)
+        # qualified refs (src.col / excluded.col) keep resolving; a join
+        # tree keeps the aliases of its relations
+        s_name = None
+        if not isinstance(src, ast.Join):
+            s_name = (node.source_alias or getattr(src, "alias", None)
+                      or (src.parts[-1] if isinstance(src, ast.TableRef)
+                          else "__source"))
+            s_df = s_df.alias(s_name)
 
         ec = ExprCompiler(self, scope=scope)
-        joined = tj.join(s_df, ec.compile(node.on), "full_outer")
+        on = ec.compile(node.on)
+        if ec.pending_scalar or ec.pending_correlated or ec.pending_theta:
+            raise CompileError(
+                "subqueries in the join condition of MERGE ... ON, "
+                "UPDATE ... FROM or DELETE ... USING are not supported")
+        how = "full_outer" if node.not_matched else "left_outer"
+        joined = tj.join(s_df, on, how)
 
         m_cond = F.col("__t_mark").eqNullSafe(True) \
             & F.col("__s_mark").eqNullSafe(True)
@@ -495,15 +486,19 @@ class Executor:
             (to_cond, node.not_matched_by_source, "by_source"),
             (so_cond, node.not_matched, "insert"),
         )
+        # each arm's full condition, compiled once: a subquery in it then
+        # attaches once, before any chain reads it
+        arm_cond = {
+            (seg_kind, i): seg_cond if a.condition is None
+            else seg_cond & ec.compile(a.condition).eqNullSafe(True)
+            for seg_cond, actions, seg_kind in segments
+            for i, a in enumerate(actions)}
 
         def build(value_of, defaults):
             chain = None
             for seg_cond, actions, seg_kind in segments:
-                for a in actions:
-                    c = seg_cond
-                    if a.condition is not None:
-                        c = c & ec.compile(a.condition).eqNullSafe(True)
-                    v = value_of(a, seg_kind)
+                for i, a in enumerate(actions):
+                    c, v = arm_cond[seg_kind, i], value_of(a, seg_kind)
                     chain = F.when(c, v) if chain is None else chain.when(c, v)
                 d = defaults[seg_kind]
                 chain = (F.when(seg_cond, d) if chain is None
@@ -540,18 +535,25 @@ class Executor:
             "matched": F.lit(True), "by_source": F.lit(True),
             "insert": F.lit(False)})
 
-        # pg duplicate-match guard, evaluated inside the plan
-        n_match = F.sum(F.when(m_cond, 1).otherwise(0)) \
-            .over(Window.partitionBy("__t_id"))
-        guard = F.when(
-            F.col("__t_id").isNotNull() & (n_match > 1),
-            F.raise_error(F.lit(
-                "MERGE command cannot affect row a second time: a target "
-                "row matched more than one source row")).cast("boolean"),
-        ).otherwise(F.lit(True))
+        # one match per target row, evaluated inside the plan
+        per_target = Window.partitionBy("__t_id")
+        if one_match:
+            # the join forms have no insert arm: every row has a target id
+            guard = F.row_number().over(per_target.orderBy("__s_mark")) == 1
+        else:
+            n_match = F.sum(F.when(m_cond, 1).otherwise(0)).over(per_target)
+            guard = F.when(
+                F.col("__t_id").isNotNull() & (n_match > 1),
+                F.raise_error(F.lit(
+                    "MERGE command cannot affect row a second time: a "
+                    "target row matched more than one source row"))
+                .cast("boolean"),
+            ).otherwise(F.lit(True))
 
         joined, _ = QueryCompiler(self, scope)._attach_pending(joined, ec)
         joined = joined.withColumn("__guard", guard)  # window not legal in WHERE
+        if one_match:
+            joined = _opcache.local_checkpoint_tracked(joined, eager=False)
         scope[node.target] = (joined
                               .where(keep & F.col("__guard"))
                               .select(*out_cols))
@@ -570,18 +572,25 @@ class Executor:
                                    "insert": no_action})
         # delete rows: out_cols already carry the old image (the delete arm's
         # per-column value is tcol(c)); update/insert rows the post-image.
-        # Source columns ride along as __src_<c> helper columns (invisible
-        # to `*` expansion) so RETURNING may reference the matched source
-        # row via its alias (pg 17); for target-only (BY SOURCE) rows they
-        # are NULL, matching pg.
+        # Then the source columns no other column shares, under their bare
+        # names, and, for a single source relation, every source column as
+        # a __src_<c> helper column (invisible to `*` expansion) so
+        # RETURNING may reference the matched source row via its alias
+        # (pg 17). For target-only (BY SOURCE) rows they are NULL, like pg.
         src_cols = [c for c in s_df.columns if not c.startswith("__")]
+
+        def scol(c):
+            return F.col(f"`{s_name}`.`{c}`" if s_name else f"`{c}`")
+
+        bare = [scol(c).alias(c) for c in src_cols
+                if c not in t_cols and src_cols.count(c) == 1]
+        carriers = ([scol(c).alias(f"__src_{c}") for c in src_cols]
+                    if s_name else [])
         affected = (joined
                     .withColumn("__action", action)
                     .where(F.col("__action").isNotNull() & F.col("__guard"))
-                    .select(*out_cols,
-                            F.col("__action").alias("__merge_action"),
-                            *[F.col(f"`{s_name}`.`{c}`").alias(f"__src_{c}")
-                              for c in src_cols]))
+                    .select(*out_cols, *bare, *carriers,
+                            F.col("__action").alias("__merge_action")))
         return self._returning(scope, t_name, affected, node.returning,
                                src_alias=s_name, src_cols=src_cols)
 
@@ -852,66 +861,20 @@ class Executor:
                                        keys, "left_anti")
                             .select(*base.columns))
                 scope[node.table] = base.unionByName(affected)
-            else:  # DO UPDATE — desugar to MERGE (excluded = proposed row)
-                # pg raises when the batch itself carries a duplicate
-                # conflict key ("ON CONFLICT DO UPDATE command cannot affect
-                # row a second time") — for keys already in the table the
-                # MERGE duplicate-match guard catches this, but two batch
-                # rows sharing a NEW key would otherwise both take the NOT
-                # MATCHED INSERT arm and silently insert duplicates.
-                keys = list(node.conflict_cols)
-                # NULL conflict keys never conflict in pg (NULL <> NULL for
-                # uniqueness) — such rows always take the insert path, so
-                # exclude them from the duplicate-key check
-                non_null = df
-                for k in keys:
-                    non_null = non_null.where(F.col(k).isNotNull())
-                dup = (non_null.groupBy(*keys).count()
-                       .where(F.col("count") > 1).limit(1).collect())
-                if dup:
-                    raise ValueError(
-                        "ON CONFLICT DO UPDATE command cannot affect row a "
-                        f"second time (duplicate conflict key in batch: "
-                        f"{tuple(dup[0][k] for k in keys)})")
-                on = None
-                for c in node.conflict_cols:
-                    eq = ast.Binary(op="=",
-                                    left=ast.ColumnRef(
-                                        parts=(node.table, c)),
-                                    right=ast.ColumnRef(
-                                        parts=("excluded", c)))
-                    on = eq if on is None else ast.Binary(
-                        op="and", left=on, right=eq)
-                merge = ast.Merge(
-                    target=node.table,
-                    source=ast.TableRef(parts=("__excluded",)),
-                    on=on, source_alias="excluded",
-                    matched=(ast.MergeAction(
-                        kind="update", condition=node.conflict_where,
-                        assignments=node.conflict_assignments),),
-                    not_matched=(ast.MergeAction(
-                        kind="insert",
-                        insert_values=tuple(
-                            ast.ColumnRef(parts=("excluded", c))
-                            for c in base.columns)),),
-                    # RETURNING rides the merge's affected-row machinery:
-                    # inserted + updated rows only — a conflict row whose
-                    # DO UPDATE ... WHERE failed takes no arm, so it is
-                    # neither updated nor returned (pg semantics)
-                    returning=node.returning)
-                tmp = dict(scope)
-                tmp["__excluded"] = df
-                ret = self._exec_merge(merge, tmp)
+            else:  # DO UPDATE
+                tmp = dict(scope, __excluded=df)
+                ret = self._exec_merge(
+                    self._upsert_as_merge(node, df, base.columns), tmp)
                 scope[node.table] = tmp[node.table]
                 return ret
             if node.returning:
                 return self._returning(scope, node.table, affected,
                                        node.returning)
             return None
-        if isinstance(node, ast.Delete) and node.using is not None:
-            return self._exec_dml_join(node, scope, kind="delete")
-        if isinstance(node, ast.Update) and node.from_ is not None:
-            return self._exec_dml_join(node, scope, kind="update")
+        if (isinstance(node, ast.Delete) and node.using is not None
+                or isinstance(node, ast.Update) and node.from_ is not None):
+            return self._exec_merge(self._join_dml_as_merge(node), scope,
+                                    one_match=True)
         if isinstance(node, ast.Delete):
             # alias to the table name so qualified self-refs (t.a) and
             # correlated subquery outer refs resolve

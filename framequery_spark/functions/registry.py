@@ -13,6 +13,7 @@ Python UDFs.
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Dict, List
 
 import pandas as pd
@@ -115,9 +116,8 @@ def _parse_ident_py(s: str, strict: bool):
         return out
 
 
+@functools.cache
 def _parse_ident_udf():
-    if "parse_ident" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["parse_ident"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
@@ -127,7 +127,6 @@ def _parse_ident_udf():
             else _parse_ident_py(s, bool(st))
             for s, st in zip(col, strict)])
 
-    _JSON_UDF_CACHE["parse_ident"] = pi
     return pi
 
 
@@ -550,13 +549,47 @@ _fixed("array_contains_all",
 _fixed("array_overlaps", lambda a: F.arrays_overlap(a[0], a[1]))
 _fixed("__array", lambda a: F.array(*a))  # ARRAY[...] constructor
 _fixed("row", lambda a: F.struct(*a))  # pg ROW(...) record constructor
+
+
+def _fractional(*cols: Column) -> bool:
+    """True when some argument's type, known before analysis (a literal
+    or a cast), is a non-integral number. One py4j probe per argument at
+    compile time, like _const_int."""
+    from py4j.protocol import Py4JError
+    from pyspark.sql import SparkSession
+
+    sess = SparkSession.getActiveSession()
+    try:
+        for c in cols:
+            e = sess._jsparkSession.expression(c._jc)
+            if e.resolved():
+                name = e.dataType().typeName()
+                if name in ("double", "float") or name.startswith("decimal"):
+                    return True
+    except (Py4JError, AttributeError):
+        pass
+    return False
+
+
 def pg_sequence_column(start: Column, stop: Column,
                        step: Column = None) -> Column:
     """F.sequence with pg's empty-set semantics: a series whose step points
     away from the stop bound yields ZERO elements (Spark's sequence would
     either default the step to -1 or raise). `step - step` is the typed
     zero, so the guard works for numeric AND interval steps. The typed
-    empty array comes from slice(sequence(start, start), 1, 0)."""
+    empty array comes from slice(sequence(start, start), 1, 0).
+
+    Spark's sequence takes integral, date and timestamp bounds only, so a
+    fractional series (pg's numeric form) is the integer index sequence
+    transformed to start + i * step. Its length rounds the step count to 9
+    places first, so 0.1 .. 0.3 by 0.1 keeps its last element."""
+    if _fractional(start, stop, *([] if step is None else [step])):
+        if step is None:
+            step = F.lit(1)
+        n = (F.floor(F.round((stop - start) / step, 9)) + 1).cast("int")
+        idx = F.sequence(F.lit(0), F.greatest(n, F.lit(1)) - 1)
+        return F.slice(F.transform(idx, lambda i: start + i * step),
+                       1, F.greatest(n, F.lit(0)))
     empty = F.slice(F.sequence(start, start), 1, 0)
     if step is None:
         return F.when(start <= stop, F.sequence(start, stop)) \
@@ -691,8 +724,6 @@ _fixed("__overlay", lambda a: F.overlay(a[0], a[1], a[2])
 
 
 def _count_nonnull(a):
-    import functools
-
     cols = [c.isNotNull().cast("int") for c in a]
     return functools.reduce(lambda x, y: x + y, cols)
 
@@ -874,15 +905,11 @@ def _pg_json_path(p) -> list:
     return [s.strip() for s in p.split(",")] if p else []
 
 
-# one lazily-built singleton per UDF shape — pandas_udf construction wraps
-# and serializes a closure, which should happen once per process, not once
-# per compiled expression
-_JSON_UDF_CACHE: Dict[str, Callable] = {}
-
-
+# The pandas_udf factories are functools.cache'd: building one wraps and
+# serializes a closure, which should happen once per process and UDF
+# shape, not once per compiled expression
+@functools.cache
 def _json_strip_nulls_udf():
-    if "strip" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["strip"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -904,7 +931,6 @@ def _json_strip_nulls_udf():
 
         return col.map(one)
 
-    _JSON_UDF_CACHE["strip"] = strip
     return strip
 
 
@@ -913,10 +939,8 @@ _fixed("json_strip_nulls",
        "jsonb_strip_nulls")
 
 
+@functools.cache
 def _jsonb_edit_udf(insert_mode: bool):
-    key = "insert" if insert_mode else "set"
-    if key in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE[key]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -992,7 +1016,6 @@ def _jsonb_edit_udf(insert_mode: bool):
                           for t, p, n, fl in
                           zip(target, path, newval, flag)])
 
-    _JSON_UDF_CACHE[key] = edit
     return edit
 
 
@@ -1090,9 +1113,8 @@ def _lev_costed_py(s: str, t: str, ci: int, cd: int, cs: int) -> int:
     return prev[n]
 
 
+@functools.cache
 def _lev_costed_udf():
-    if "lev_costed" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["lev_costed"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("int")
@@ -1106,7 +1128,6 @@ def _lev_costed_udf():
 
         return pd.Series([one(*row) for row in zip(s, t, ci, cd, cs)])
 
-    _JSON_UDF_CACHE["lev_costed"] = lev
     return lev
 
 
@@ -1371,9 +1392,8 @@ def _metaphone_py(word: str, maxlen: int) -> str:
     return "".join(out)[:maxlen]
 
 
+@functools.cache
 def _metaphone_udf():
-    if "metaphone" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["metaphone"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -1388,7 +1408,6 @@ def _metaphone_udf():
 
         return pd.Series([one(s, m) for s, m in zip(col, maxlen)])
 
-    _JSON_UDF_CACHE["metaphone"] = mph
     return mph
 
 
@@ -1397,13 +1416,11 @@ def _metaphone(args: List[Column]) -> Column:
     return _metaphone_udf()(args[0].cast("string"), args[1].cast("int"))
 
 
+@functools.cache
 def _dmetaphone_udf(alt: bool):
     # pg fuzzystrmatch dmetaphone()/dmetaphone_alt(): Double Metaphone
     # primary/alternate codes (functions/dmetaphone.py), 4-char max like
     # pg. Same Arrow-pandas_udf exception tier as metaphone.
-    key = f"dmetaphone_{int(alt)}"
-    if key in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE[key]
     from pyspark.sql.functions import pandas_udf
 
     from .dmetaphone import _double_metaphone
@@ -1414,7 +1431,6 @@ def _dmetaphone_udf(alt: bool):
                           else _double_metaphone(s)[1 if alt else 0]
                           for s in col])
 
-    _JSON_UDF_CACHE[key] = dmp
     return dmp
 
 
@@ -1513,6 +1529,7 @@ def decode_known(data: Column, fmt: str) -> Column:
     return _escape_decode(data)
 
 
+@functools.cache
 def _escape_encode_pd():
     # Runtime-format escape tier: the JVM escape fold is a higher-order
     # aggregate, and Spark rejects any lambda whose body wraps a
@@ -1520,8 +1537,6 @@ def _escape_encode_pd():
     # HOF in a when-branch fails even for hex/base64 formats. The
     # non-literal-format path therefore computes escape via a pandas_udf
     # (same semantics as _escape_encode; literal formats stay JVM).
-    if "esc_enc" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["esc_enc"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -1541,13 +1556,11 @@ def _escape_encode_pd():
 
         return col.map(one)
 
-    _JSON_UDF_CACHE["esc_enc"] = esc_enc
     return esc_enc
 
 
+@functools.cache
 def _escape_decode_pd():
-    if "esc_dec" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["esc_dec"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("binary")
@@ -1578,7 +1591,6 @@ def _escape_decode_pd():
 
         return col.map(one)
 
-    _JSON_UDF_CACHE["esc_dec"] = esc_dec
     return esc_dec
 
 
@@ -1700,6 +1712,7 @@ def _digest(a: List[Column]) -> Column:
 _fixed("digest", _digest)
 
 
+@functools.cache
 def _hmac_udf():
     # pgcrypto hmac(data, key, type) -> bytea: RFC 2104 keyed-hash MAC
     # over the same algorithm set as digest(). The ipad/opad XOR over a
@@ -1708,8 +1721,6 @@ def _hmac_udf():
     # Python's stdlib hmac inside an Arrow pandas_udf (the documented
     # exception tier), pinned by the RFC 2202/4231 published test vectors
     # in tests/test_pg_conformance.py.
-    if "hmac" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["hmac"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("binary")
@@ -1732,7 +1743,6 @@ def _hmac_udf():
         return pd.Series([one(d, k, a)
                           for d, k, a in zip(data, key, algo)])
 
-    _JSON_UDF_CACHE["hmac"] = hm
     return hm
 
 
@@ -1741,9 +1751,8 @@ def _hmac_fn(args: List[Column]) -> Column:
     return _hmac_udf()(args[0], args[1], args[2].cast("string"))
 
 
+@functools.cache
 def _normalize_udf():
-    if "normalize" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["normalize"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -1757,7 +1766,6 @@ def _normalize_udf():
 
         return pd.Series([one(s, f) for s, f in zip(col, form)])
 
-    _JSON_UDF_CACHE["normalize"] = norm
     return norm
 
 
@@ -1778,10 +1786,8 @@ def _normalize(args: List[Column]) -> Column:
 # udf body: cloudpickle must serialize the closure by value, because the
 # engine package is not importable on executor python workers.
 
+@functools.cache
 def jsonb_minus_udf(mode: str):
-    key = f"minus_{mode}"
-    if key in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE[key]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -1817,13 +1823,11 @@ def jsonb_minus_udf(mode: str):
 
         return pd.Series([one(t, a) for t, a in zip(target, arg)])
 
-    _JSON_UDF_CACHE[key] = minus
     return minus
 
 
+@functools.cache
 def jsonb_delete_path_udf():
-    if "delete_path" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["delete_path"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -1876,13 +1880,11 @@ def jsonb_delete_path_udf():
 
         return pd.Series([one(t, p) for t, p in zip(target, path)])
 
-    _JSON_UDF_CACHE["delete_path"] = delp
     return delp
 
 
+@functools.cache
 def jsonb_contains_udf():
-    if "contains" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["contains"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
@@ -1921,13 +1923,11 @@ def jsonb_contains_udf():
         return pd.Series([one(x, y) for x, y in zip(a, b)],
                          dtype="object")
 
-    _JSON_UDF_CACHE["contains"] = contains
     return contains
 
 
+@functools.cache
 def jsonb_concat_udf():
-    if "concat" in _JSON_UDF_CACHE:
-        return _JSON_UDF_CACHE["concat"]
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -1951,5 +1951,4 @@ def jsonb_concat_udf():
 
         return pd.Series([one(x, y) for x, y in zip(a, b)])
 
-    _JSON_UDF_CACHE["concat"] = jconcat
     return jconcat

@@ -185,6 +185,25 @@ class DmlGen:
                f"WHERE t.id = src.id AND {cond}{ret}")
         return sql, sql, has_ret
 
+    def update_from_pair(self):
+        # two source relations sharing every column name; s2.id = src.id
+        # keeps each target row's match unique
+        k = self.r.randint(1, 9)
+        cond = self.r.choice(self.SRC_CONDS)
+        has_ret = self.r.random() < 0.5
+        ret = " RETURNING t.id, t.v" if has_ret else ""
+        sql = (f"UPDATE t SET v = src.v + s2.v + {k} FROM src, src AS s2 "
+               f"WHERE t.id = src.id AND s2.id = src.id AND {cond}{ret}")
+        return sql, sql, has_ret
+
+    def delete_using_pair(self):
+        cond = self.r.choice(self.SRC_CONDS)
+        has_ret = self.r.random() < 0.5
+        ret = " RETURNING t.id, t.v" if has_ret else ""
+        sql = (f"DELETE FROM t USING src, src AS s2 "
+               f"WHERE t.id = src.id AND s2.id = src.id AND {cond}{ret}")
+        return sql, sql, has_ret
+
     def with_update(self):
         # r12: WITH on UPDATE (the fuzzer only had WITH-on-INSERT)
         k = self.r.randint(1, 9)
@@ -352,7 +371,8 @@ class DmlGen:
         gens = [self.insert_values, self.insert_select, self.with_insert,
                 self.update, self.update, self.update_from,
                 self.delete, self.delete_using, self.merge, self.merge,
-                self.with_update, self.with_delete]
+                self.with_update, self.with_delete, self.update_from_pair,
+                self.delete_using_pair]
         return self.r.choice(gens)()
 
     def sequence(self):

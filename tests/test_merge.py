@@ -525,3 +525,80 @@ def test_with_cte_on_dml(spark):
     # a CTE named like the DML target would shadow it — rejected
     with pytest.raises(Exception, match="collides with the DML target"):
         ex.execute("WITH w AS (SELECT 1 AS a) UPDATE w SET v = 1")
+
+
+# ------------------------------------- the join forms run as MERGE rewrites
+
+
+def _executor_tsu(spark):
+    ex = _executor_ts(spark)
+    ex.update(u=spark.createDataFrame(
+        pd.DataFrame({"c": [99, 88, 1], "d": [5, 6, 7]})))
+    return ex
+
+
+@pytest.mark.parametrize("stmt", [
+    "UPDATE t SET b = u.d FROM s, u WHERE t.a = s.a AND s.c = u.c",
+    "DELETE FROM t USING s, u WHERE t.a = s.a AND s.c = u.c",
+], ids=["update_from", "delete_using"])
+def test_join_forms_over_relations_sharing_a_column(spark, stmt):
+    # s.c and u.c share a name: a join-tree source keeps each relation's
+    # own alias, so both qualified refs resolve
+    ex = _executor_tsu(spark)
+    con = _duck_ts()
+    con.execute("CREATE TABLE u(c INT, d INT); "
+                "INSERT INTO u VALUES (99, 5), (88, 6), (1, 7)")
+    ex.execute(stmt)
+    con.execute(stmt)
+    assert _rows(ex) == sorted(map(tuple, con.execute(
+        "SELECT * FROM t ORDER BY a").fetchall()))
+
+
+def test_update_from_set_subquery(spark):
+    ex = _executor_ts(spark)
+    ex.execute("UPDATE t SET b = (SELECT max(c) FROM s) FROM s "
+               "WHERE t.a = s.a")
+    assert _rows(ex) == [(1, 10), (2, 99), (3, 99)]
+
+
+def test_merge_update_unknown_column_raises(spark):
+    from framequery_spark.compiler.expressions import CompileError
+
+    ex = _executor_ts(spark)
+    with pytest.raises(CompileError, match="nosuch"):
+        ex.execute("MERGE INTO t USING s ON t.a = s.a "
+                   "WHEN MATCHED THEN UPDATE SET nosuch = 1")
+    assert _rows(ex) == [(1, 10), (2, 20), (3, 30)]
+
+
+def test_merge_returning_bare_source_column(spark):
+    # pg 17: a source column no target column shares resolves bare
+    ex = _executor_ts(spark)
+    got = sorted(tuple(r) for r in ex.execute(
+        "MERGE INTO t USING s ON t.a = s.a "
+        "WHEN MATCHED THEN UPDATE SET b = s.c + 1 "
+        "RETURNING a, c").collect())
+    assert got == [(2, 99), (3, 88)]
+
+
+def test_merge_subquery_in_on_raises_compile_error(spark):
+    from framequery_spark.compiler.expressions import CompileError
+
+    ex = _executor_ts(spark)
+    with pytest.raises(CompileError, match="join condition"):
+        ex.execute("MERGE INTO t USING s "
+                   "ON t.a = s.a AND s.c > (SELECT min(c) FROM s) "
+                   "WHEN MATCHED THEN DELETE")
+
+
+def test_delete_using_two_matches_deletes_once(spark):
+    # pg deletes a target row once however many USING rows match it, and
+    # does not raise the MERGE duplicate-match error
+    t = pd.DataFrame({"a": [1, 2], "b": [10, 20]})
+    s = pd.DataFrame({"a": [1, 1], "c": [5, 7]})
+    ex = fq.Executor(scope={"t": spark.createDataFrame(t),
+                            "s": spark.createDataFrame(s)}, spark=spark)
+    ret = [tuple(r) for r in ex.execute(
+        "DELETE FROM t USING s WHERE t.a = s.a RETURNING a, b").collect()]
+    assert ret == [(1, 10)]
+    assert _rows(ex) == [(2, 20)]

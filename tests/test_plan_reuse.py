@@ -66,28 +66,49 @@ def test_repeated_dbapi_read_does_not_parse_again(spark, parses):
 
 def test_fallback_read_stays_a_hit_across_writes_to_other_tables(
         spark, tpch_scope, parses):
-    """q37 reaches the column-type fallback, which reads every scope
+    """q68 reaches the column-type fallback, which reads every scope
     table's dtypes; writes to an unrelated table keep the dtypes, so the
     read keeps its plan."""
     import __spark_entry__ as entry
 
-    q37 = entry._Q["q37_big_orders"][0]
+    q68 = entry._Q["q68_multirange_coverage"][0]
     ex = fq.Executor(scope=dict(tpch_scope), spark=spark)
     try:
         ex.execute("CREATE TABLE w AS SELECT o_orderkey, o_totalprice "
                    "FROM orders WHERE o_orderkey < 100")
         n = ex.execute("SELECT count(*) FROM w").collect()[0][0]
-        want = _rows(ex.execute(q37))
+        want = _rows(ex.execute(q68))
         (_, reads), = [v for k, v in ex._plans.entries.items()
-                       if k[0] == q37]
-        assert reads.schema is not None, "q37 should reach the fallback"
+                       if k[0] == q68]
+        assert reads.schema is not None, "q68 should reach the fallback"
         for i in range(3):
             ex.execute(f"INSERT INTO w VALUES ({10 ** 6 + i}, 1.5)")
             assert ex.execute("SELECT count(*) FROM w").collect()[0][0] \
                 == n + i + 1
-            assert _rows(ex.execute(q37)) == want
-        assert parses.count(q37) == 1
+            assert _rows(ex.execute(q68)) == want
+        assert parses.count(q68) == 1
         assert ex.plan_cache_info()["hits"] >= 3
+    finally:
+        ex.close()
+
+
+def test_join_condition_keeps_its_hit_across_unrelated_dtype_changes(
+        spark):
+    """A join ON compiles without an input frame; its `=` must not probe
+    the scope dtypes (only `+` and `-` read operand kinds), so rebinding an
+    unrelated table with other dtypes keeps the join's plan."""
+    ex = fq.Executor(scope={
+        "t": spark.createDataFrame([(1, 10), (2, 20)], "a bigint, b bigint"),
+        "s": spark.createDataFrame([(2, 7)], "a bigint, c bigint"),
+        "u": spark.createDataFrame([(1,)], "x bigint")}, spark=spark)
+    q = "SELECT t.a, s.c FROM t JOIN s ON t.a = s.a"
+    try:
+        assert _rows(ex.execute(q)) == [(2, 7)]
+        assert _rows(ex.execute(q)) == [(2, 7)]
+        ex.update(u=spark.createDataFrame([("x",)], "x string"))
+        assert _rows(ex.execute(q)) == [(2, 7)]
+        info = ex.plan_cache_info()
+        assert (info["hits"], info["misses"], info["evictions"]) == (2, 1, 0)
     finally:
         ex.close()
 

@@ -134,6 +134,23 @@ def test_generate_series_with_step(spark, scope):
     assert out == {0, 5, 10}
 
 
+@pytest.mark.parametrize("args, want", [
+    ("0.5, 2", [0.5, 1.5]),
+    ("0, 1, 0.25", [0.0, 0.25, 0.5, 0.75, 1.0]),
+    ("0.1, 0.3, 0.1", [0.1, 0.2, 0.3]),
+    ("2, 0.5, -0.5", [2.0, 1.5, 1.0, 0.5]),
+    ("2.5, 1", []),
+])
+@pytest.mark.parametrize("form", ["from", "select"])
+def test_generate_series_fractional(spark, args, want, form):
+    # pg's numeric series: start, start + step, ... while within stop; a
+    # step pointing away from stop is the empty set
+    q = (f"SELECT * FROM generate_series({args})" if form == "from"
+         else f"SELECT generate_series({args}) AS g")
+    got = [float(r[0]) for r in fq.execute(q, {}, spark=spark).collect()]
+    assert got == pytest.approx(want)
+
+
 def test_copy_from_table_function(spark, scope, tmp_path):
     csv = tmp_path / "f.csv"
     pd.DataFrame({"a": [1, 2], "b": ["x", "y"]}).to_csv(csv, sep=";", index=False)

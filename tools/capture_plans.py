@@ -5,7 +5,7 @@ Usage:
 
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<entry>_<suffix>.txt (round default
 r13) for each named entry (default: a built-in list of the bench's most
-expensive entries). The suffix is "before" / "after". Expression ids
+expensive entries and the two DML-core entries). The suffix is "before" / "after". Expression ids
 (`#<id>`), exchange `plan_id=<id>` numbers, RDD ids (`RDD[<id>]`, e.g.
 a checkpoint scan's `MapPartitionsRDD[36] at localCheckpoint`) and the
 random 8-hex suffix of staged hidden columns (`__lat_f4378a6b`) are
@@ -33,6 +33,8 @@ DEFAULT_ENTRIES = [
     "q73_fuzzy_costed", "q65_recursive_cycle", "op_dedup_keep_best",
     "op_winnow_pairs", "op_dsir_select", "q01_pricing_summary",
     "op_textrank", "op_bigram_nll",
+    # the DML core: MERGE ... RETURNING and the ON CONFLICT DO UPDATE rewrite
+    "q60_merge_returning", "q61_upsert_returning",
 ]
 
 
